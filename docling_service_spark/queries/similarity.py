@@ -16,7 +16,7 @@ both, so values match exactly in practice.
 
 from __future__ import annotations
 
-from pyspark.sql import Observation, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .common import load
@@ -115,24 +115,33 @@ def rank_topk(scored, top_k: int = TOP_K):
     )
 
 
+def _group_pair_sims(pdf, threshold_e6: int):
+    """One group's (vec_id, embedding) rows → ``(ids, id_a, id_b, sim_e6)``:
+    ids sorted ascending, then all (id_a < id_b) pair sims at or above
+    ``threshold_e6`` over raw float32 embeddings — normalize-once then the
+    blocked sequential-fold pair kernel (veckernels.pair_sims_e6),
+    bit-identical to the JVM join+fold including the NaN→0 floor rule."""
+    import numpy as np
+
+    from docling_service_spark.queries.veckernels import (
+        list_to_matrix, pair_sims_e6, seq_inv_norm)
+
+    pdf = pdf.sort_values("vec_id", kind="stable")
+    ids = pdf["vec_id"].to_numpy()
+    X = list_to_matrix(pdf["embedding"], DIM)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        N = X * seq_inv_norm(X)[:, None]
+        return (ids, *pair_sims_e6(ids, N, threshold_e6))
+
+
 def _make_group_pairs_fn(threshold_e6: int, cluster_col: str | None):
-    """applyInPandas factory: all same-group (id_a < id_b) pair sims over
-    raw float32 embeddings — normalize-once then the blocked sequential-fold
-    pair kernel (veckernels.pair_sims_e6), bit-identical to the JVM
-    join+fold including the NaN→0 floor rule."""
+    """applyInPandas factory: a group's pair rows from _group_pair_sims,
+    tagged with the group's ``cluster_col`` value when given."""
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        from docling_service_spark.queries.veckernels import (
-            list_to_matrix, pair_sims_e6, seq_inv_norm)
-
-        pdf = pdf.sort_values("vec_id", kind="stable")
-        ids = pdf["vec_id"].to_numpy()
-        X = list_to_matrix(pdf["embedding"], DIM)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            N = X * seq_inv_norm(X)[:, None]
-            a, b, s = pair_sims_e6(ids, N, threshold_e6)
+        _, a, b, s = _group_pair_sims(pdf, threshold_e6)
         data = {"id_a": a, "id_b": b}
         if cluster_col is not None:
             data[cluster_col] = np.full(
@@ -272,7 +281,13 @@ def _make_bucket_arrow_kernel(n_planes: int):
     return kernel
 
 
-def lsh_bucketed_pairs(emb, *, n_planes: int = N_PLANES, min_sim_e6: int = 0):
+def _bucketed(emb, n_planes: int):
+    """(vec_id, bucket, embedding) through the bucket Arrow kernel."""
+    return emb.select(F.col("vec_id").cast("bigint").alias("vec_id"), "embedding") \
+        .mapInArrow(_make_bucket_arrow_kernel(n_planes), _BUCKET_DDL)
+
+
+def lsh_bucketed_pairs(emb, *, n_planes: int = N_PLANES):
     """IVF/LSH-style ANN: candidates restricted to same-bucket pairs.
 
     Round-9 shape (guide §2.3/§4.2): ONE Arrow kernel computes every
@@ -282,15 +297,11 @@ def lsh_bucketed_pairs(emb, *, n_planes: int = N_PLANES, min_sim_e6: int = 0):
     normalizes + scores all (id_a < id_b) pairs in NumPy — the quadratic
     pair set never materializes as JVM rows.  Values are bit-identical to
     the JVM join+fold path (kept below as ``_lsh_bucketed_pairs_jvm`` and
-    pinned by tests/test_veckernels.py).  ``min_sim_e6`` pushes a caller's
-    similarity threshold (e.g. q43's near-dup cut) into the kernel so
-    below-threshold pairs never cross the Python→JVM boundary.
-    ``n_planes`` must track corpus size (``n_planes_for``) to keep
-    per-bucket pair counts flat — see module header."""
-    b = emb.select(F.col("vec_id").cast("bigint").alias("vec_id"), "embedding") \
-        .mapInArrow(_make_bucket_arrow_kernel(n_planes), _BUCKET_DDL)
-    return b.groupBy("bucket").applyInPandas(
-        _make_group_pairs_fn(min_sim_e6, None),
+    pinned by tests/test_veckernels.py).  ``n_planes`` must track corpus
+    size (``n_planes_for``) to keep per-bucket pair counts flat — see
+    module header."""
+    return _bucketed(emb, n_planes).groupBy("bucket").applyInPandas(
+        _make_group_pairs_fn(0, None),
         schema="id_a long, id_b long, sim_e6 long")
 
 
@@ -373,405 +384,38 @@ ORACLES = {
 NEAR_DUP_SIM_E6 = 350_000  # cosine >= 0.35 (synthetic vectors are near-orthogonal)
 
 
-MAX_CC_ROUNDS = 30  # sf1's worst chain used 20 — headroom without masking divergence
-# Measured (r6, sf1): chained eager localCheckpoints degrade past ~15 rounds
-# (per-round wall doubles; see connected_components docstring) — loops switch
-# to a spill beyond this many label-propagation rounds (edge pin excluded, so
-# the switch trips on the 13th materialization counting it).
-_LOCAL_CK_SAFE_ROUNDS = 12
+def _near_dup_keepers(pdf):
+    """applyInPandas: one bucket's rows → (vec_id, keeper_id) for every row,
+    keeper = the smallest vec_id in its near-dup component."""
+    import pandas as pd
 
+    from docling_service_spark.queries.veckernels import component_min_labels
 
-def _is_local_master(sc) -> bool:
-    return sc.master.startswith("local")
-
-
-def _derive_cluster_spill_dir(spark) -> str | None:
-    """Shared-filesystem spill dir for the long-loop guard on cluster
-    masters.  ``spark.docling.cc.checkpointDir`` wins when set (any scheme —
-    the operator said so); otherwise ``spark.sql.warehouse.dir`` qualifies
-    only with a non-``file:`` scheme, because a driver-local path is not
-    writable by executors on a real cluster.  Returns a unique subdirectory
-    (concurrent CC loops must not prune each other's steps) or None."""
-    import uuid
-
-    explicit = spark.conf.get("spark.docling.cc.checkpointDir", None)
-    base = explicit
-    if base is None:
-        wh = spark.conf.get("spark.sql.warehouse.dir", None) or ""
-        scheme = wh.split("://", 1)[0] if "://" in wh else "file"
-        if scheme != "file":
-            base = wh
-    if not base:
-        return None
-    return f"{base.rstrip('/')}/_cc_spill/{uuid.uuid4().hex}"
-
-
-DENSIFY_MAX_MID_DEGREE = 32
-
-
-def densify_pairs(pairs):
-    """Distance-≤2 edge densification for a CC input (r9): adds a pair
-    (a, c) for every 2-path a–m–c through a LOW-DEGREE middle vertex m.
-    Components are unchanged (a distance-2 edge connects already-connected
-    vertices — labels verified identical in tests), but the effective
-    diameter halves, so min-label propagation needs ~half the rounds:
-    measured at sf1, 18 → 10 rounds and CC wall 12.4 → 4.9 s for a 0.6 s
-    build (20 068 → 89 388 edges).
-
-    The degree cap is the scale guard AND matches the physics: squaring
-    only helps PATHS (the wavefront crawls one edge per round along them),
-    while a hub's whole neighborhood already converges in two rounds — and
-    squaring through a degree-10⁶ hub would emit 10¹² pairs.  With middles
-    capped at D, the added pairs are bounded by D·2|E|.  The input is
-    pinned with ONE localCheckpoint so the (expensive) pair query runs
-    once, not once per join branch."""
-    p = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    e = p.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).unionByName(
-        p.select(F.col("id_b").alias("a"), F.col("id_a").alias("b")))
-    low = (e.groupBy(F.col("b").alias("m")).agg(F.count(F.lit(1)).alias("d"))
-           .filter(F.col("d") <= DENSIFY_MAX_MID_DEGREE).select("m"))
-    em = e.join(low, F.col("b") == F.col("m")).select("a", "b")
-    p2 = (em.alias("x").join(e.alias("y"), F.col("x.b") == F.col("y.a"))
-          .filter(F.col("x.a") < F.col("y.b"))
-          .select(F.col("x.a").alias("id_a"), F.col("y.b").alias("id_b")))
-    return p.unionByName(p2).distinct()
+    ids, a, b, _ = _group_pair_sims(pdf, NEAR_DUP_SIM_E6)
+    return pd.DataFrame({"vec_id": ids, "keeper_id": component_min_labels(ids, a, b)})
 
 
 def q43_embedding_near_dup_keepers(spark, sf_dir):
     """Embedding-cosine near-dup dedup: vectors in the same *connected
-    component* of the near-dup graph (LSH-bucketed pairs above the
-    similarity threshold) collapse to the component's minimum vec_id —
-    the group-minimum keeper rule of content-hash dedup, and idempotent:
-    every keeper_id is itself a keeper even through similarity chains
-    (cosine is not transitive).
+    component* of the near-dup graph (LSH-bucketed pairs at or above
+    NEAR_DUP_SIM_E6) collapse to the component's minimum vec_id — the
+    group-minimum keeper rule of content-hash dedup, and idempotent: every
+    keeper_id is itself a keeper even through similarity chains (cosine is
+    not transitive).  The oracle computes the exact transitive closure with
+    a recursive CTE.
 
-    Components are computed by min-label propagation WITH pointer jumping
-    (each round also replaces a vertex's label by its label's label), so
-    convergence is O(log diameter) rounds, not O(diameter); the oracle
-    computes the exact transitive closure with a recursive CTE.
-
-    Scale hardening (round-2 verdict/advice items): every round ends in ONE
-    materializing action — an eager ``localCheckpoint`` that truncates the
-    lineage chain so the plan stays O(1) per round instead of growing across
-    iterations.  localCheckpoint stores blocks on executors only, so losing
-    an executor fails the job — fine in local mode; cluster deployments
-    needing executor-loss tolerance pass ``checkpoint_dir=`` to
-    ``connected_components`` for the per-round parquet spill (labels proven
-    identical in tests/test_connected_components.py).  The convergence count
-    is a cheap aggregate over the already-materialized checkpoint.  Exiting
-    the loop unconverged raises instead of silently returning labels that
-    diverge from the oracle."""
-    # Same pair generation as q42, with the near-dup threshold pushed into
-    # the pair kernel (r9): below-threshold pairs never leave the per-bucket
-    # NumPy pass — identical rows to q42(...).filter(sim_e6 >= threshold).
-    # densify_pairs adds degree-capped distance-2 edges (identical
-    # components, ~half the propagation rounds — see its docstring).
-    pairs = densify_pairs(lsh_bucketed_pairs(
-        load(spark, sf_dir, "embeddings"), n_planes=N_PLANES,
-        min_sim_e6=NEAR_DUP_SIM_E6))
-    emb = load(spark, sf_dir, "embeddings").select(F.col("vec_id").cast("bigint").alias("vec_id"))
-    labels, _rounds = connected_components(emb, pairs)
-    return labels
-
-
-def connected_components(vertices, pairs, *, max_rounds: int = MAX_CC_ROUNDS,
-                         checkpoint_dir: str | None = None,
-                         telemetry: dict | None = None):
-    """Min-label propagation with pointer jumping over ``vertices (vec_id)``
-    and undirected ``pairs (id_a, id_b)``.  Returns ``(labels, rounds)`` where
-    labels has (vec_id, keeper_id = component min).  See q43 docstring for
-    the scale-hardening rationale.
-
-    Every pair endpoint MUST appear in ``vertices`` — a missing endpoint
-    would silently split components (the propagation join drops its edges),
-    so it raises instead.  Memory: each round's localCheckpoint replaces the
-    previous one's only Python reference, so Spark's ContextCleaner
-    unpersists old rounds' blocks asynchronously — bounded, not accumulated.
-
-    ``checkpoint_dir`` selects the RELIABLE path (round-3 verdict item #6):
-    each round materializes to parquet under that directory instead of
-    ``localCheckpoint`` — losing an executor then costs a task retry, not
-    the job, which is the fault-tolerance a 1000-executor cluster needs.
-    Disk stays BOUNDED: once round N's spill is written, round N-1's is
-    deleted (only the latest step backs the returned labels; the edge pin,
-    step-001, is read every round and survives) — at most the edge pin +
-    two steps exist transiently.  The caller still owns deleting the
-    directory (edge pin + final step) after consuming the labels.  Default
-    (None) stays executor-block-backed: cheapest, correct in local mode and
-    on clusters that accept job-restart-on-executor-loss.
-
-    ``telemetry`` (optional dict) receives per-round diagnostics:
-    ``round_walls_sec`` (driver wall per round, materialize + convergence
-    aggregate included), ``edge_pin_sec``, and ``changed_per_round`` — the
-    r5 verdict #3 instrument for separating per-round fixed job latency
-    from data-volume cost in scale probes.  When any spill engages it also
-    records ``spill_dir`` + ``spill_dir_source`` ("caller" | "local-scratch"
-    | "derived") and, for the non-caller sources, ``spill_dir_reclaimed``.
-
-    Spill-dir ownership (advice r7 — the derived dir must not leak): a
-    CALLER-passed ``checkpoint_dir`` stays caller-owned — the returned
-    labels are backed by its final step file, which is exactly the
-    executor-loss tolerance the caller asked for, so this function never
-    deletes it (edge pin + final step remain; delete after consuming the
-    labels).  AUTO spill dirs (local scratch, or the cluster dir derived
-    from ``spark.docling.cc.checkpointDir`` / a non-``file:`` warehouse
-    dir) are internal cliff-avoidance with no caller contract: before
-    returning, the final labels are re-pinned with ONE ``localCheckpoint``
-    (a single call — the measured cliff is per-chain, not per-call) and
-    the whole dir is deleted through the same Hadoop FileSystem that wrote
-    it, on success and failure alike.  Only a driver crash mid-loop can
-    strand one; crashed-run leftovers are always under a ``_cc_spill/``
-    parent, so a periodic sweep of ``{base}/_cc_spill`` is safe — any live
-    loop's subdir is younger than the loop's own wall.
-
-    Long-loop guard (measured, r6): past ~15 chained eager localCheckpoints
-    in one loop, the checkpoint call's wall DOUBLES per round (sf1: rounds
-    17-20 measured 2.5/3.9/7.9/19.9 s on constant-size data, exactly
-    reproducible; the parquet-spill path stays flat at ~1.7 s/round, and
-    JVM System.gc() does not help).  All runs therefore auto-switch to a
-    spill after ``_LOCAL_CK_SAFE_ROUNDS`` label-propagation rounds (the
-    edge pin is not counted — the switch trips on the 13th materialization
-    including it): local masters spill under Spark's own scratch dir;
-    cluster masters derive a shared-filesystem spill dir from
-    ``spark.docling.cc.checkpointDir`` or, failing that, a non-``file:``
-    ``spark.sql.warehouse.dir`` (r6 verdict #6 — a deep-diameter cluster
-    run must not hit the measured cliff just because the caller ignored a
-    warning).  Both auto dirs are reclaimed before returning (see the
-    ownership paragraph above).  Only when neither yields a usable cluster
-    path does the loop stay on localCheckpoint, warning ONCE.
-    """
-    import time as _time
-    _step = [0]
-    _state = {"ckdir": checkpoint_dir, "n_local": 0, "warned": False,
-              # pin_step: which spilled step (if any) is the edge pin — only
-              # that step is exempt from pruning.  Hardcoding step-001 kept a
-              # superseded labels file forever when the long-loop guard
-              # tripped MID-loop (edge pin was localCheckpointed, so step-001
-              # is a labels round; advice r7).
-              "pin_step": None,
-              # auto_spill: the dir was derived internally (scratch/cluster)
-              # rather than caller-passed — reclaimed before returning.
-              "auto_spill": checkpoint_dir is None}
-
-    def _note_spill_dir(source: str) -> None:
-        if telemetry is not None:
-            telemetry.setdefault("spill_dir", _state["ckdir"])
-            telemetry.setdefault("spill_dir_source", source)
-
-    def _reclaim_auto_spill(sc) -> None:
-        if not (_state["auto_spill"] and _state["ckdir"] and _step[0]):
-            return
-        jpath = sc._jvm.org.apache.hadoop.fs.Path(_state["ckdir"])
-        jpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jpath, True)
-        if telemetry is not None:
-            telemetry["spill_dir_reclaimed"] = True
-
-    if checkpoint_dir is not None:
-        _note_spill_dir("caller")
-
-    def _materialize(df, *, pin: bool = False):
-        # Sets ``_state["spilled"]``: True when the materializing action was
-        # the parquet write, False on the localCheckpoint path.  Both fulfil
-        # an Observation attached to ``df`` on Spark 4.1 (measured, r9), so
-        # the convergence count rides the round's single action either way;
-        # _observed_changed keeps a bounded-wait fallback.
-        _state["spilled"] = False
-        if _state["ckdir"] is None:
-            if not pin:
-                _state["n_local"] += 1
-            if _state["n_local"] <= _LOCAL_CK_SAFE_ROUNDS:
-                return df.localCheckpoint(eager=True)
-            sc = df.sparkSession.sparkContext
-            if _is_local_master(sc):
-                # Spill under Spark's own scratch dir (reclaimed at return
-                # after the final labels are re-pinned; session stop would
-                # sweep a crashed run's leftovers anyway).
-                import tempfile
-
-                _state["ckdir"] = tempfile.mkdtemp(
-                    prefix="cc-spill-", dir=sc._temp_dir)
-                _note_spill_dir("local-scratch")
-            else:
-                derived = _derive_cluster_spill_dir(df.sparkSession)
-                if derived is None:
-                    if not _state["warned"]:
-                        _state["warned"] = True
-                        import warnings
-
-                        warnings.warn(
-                            f"connected_components passed {_LOCAL_CK_SAFE_ROUNDS} "
-                            "rounds on the localCheckpoint path; per-round wall "
-                            "degrades past this point (see docstring) and no "
-                            "shared-FS spill dir could be derived — pass "
-                            "checkpoint_dir= or set spark.docling.cc.checkpointDir",
-                            stacklevel=2)
-                    return df.localCheckpoint(eager=True)
-                _state["ckdir"] = derived
-                _note_spill_dir("derived")
-        _step[0] += 1
-        _state["spilled"] = True
-        if pin:
-            _state["pin_step"] = _step[0]
-        path = f"{_state['ckdir']}/step-{_step[0]:03d}"
-        df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
-        # Prune the superseded round: step N's write fully consumed step
-        # N-1's files, and ``labels`` is rebound to the new read below —
-        # nothing re-executes the old lineage.  Never prunes the edge-pin
-        # step (it backs every round's joins) — tracked by number, because
-        # when the long-loop guard trips MID-loop the pin was never spilled
-        # and the first spilled step is an ordinary (prunable) labels round.
-        # Deletion goes through the SAME Hadoop FileSystem the write used —
-        # checkpoint_dir is an hdfs://-style URI on the clusters this path
-        # exists for, where a driver-local shutil.rmtree would silently
-        # delete nothing.
-        prev = _step[0] - 1
-        if prev >= 1 and prev != _state["pin_step"]:
-            sc = df.sparkSession.sparkContext
-            jpath = sc._jvm.org.apache.hadoop.fs.Path(
-                f"{_state['ckdir']}/step-{prev:03d}")
-            jpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jpath, True)
-        return out
-
-    _t0 = _time.perf_counter()
-    # Symmetrize via explode, not union: the two union branches each
-    # re-evaluate the (expensive) pair query inside the pin job — explode
-    # emits both directions from ONE evaluation (r9).  The pin also appends
-    # one SELF-LOOP per vertex: the round's ``least(own, neighbor-min)``
-    # then collapses into the single neighbor-min aggregation (the self-loop
-    # contributes the vertex's own label), removing the per-round
-    # labels⟕neigh join entirely — per-round fixed latency is the cost model
-    # of this loop (rounds × job latency, not data volume), so one less
-    # join per round is a direct wall saving at every scale.  |edges| grows
-    # by |V|, bounded and one-time.
-    edges = _materialize(
-        pairs.select(F.explode(F.array(
-            F.struct(F.col("id_a").alias("vec_id"), F.col("id_b").alias("peer")),
-            F.struct(F.col("id_b").alias("vec_id"), F.col("id_a").alias("peer")),
-        )).alias("e")).select("e.vec_id", "e.peer")
-        .unionByName(vertices.select(F.col("vec_id"),
-                                     F.col("vec_id").alias("peer"))),
-        pin=True,  # the edge pin doesn't count toward the round-loop guard
-    )  # pin the edge set; the pair query never re-runs
-    if telemetry is not None:
-        telemetry["edge_pin_sec"] = round(_time.perf_counter() - _t0, 3)
-        telemetry["round_walls_sec"] = []
-        telemetry["changed_per_round"] = []
-    labels = vertices.select("vec_id", F.col("vec_id").alias("keeper_id"))
-    dangling = edges.join(labels, "vec_id", "left_anti").count()
-    if dangling:
-        raise ValueError(
-            f"{dangling} edge endpoints are missing from vertices — components "
-            f"would silently split; pass a vertex set covering every pair endpoint"
-        )
-    changed = None
-    rounds = 0
-    try:
-        labels, rounds, changed = _propagate(
-            edges, labels, max_rounds, _materialize, _state, telemetry)
-    except BaseException:
-        _reclaim_auto_spill(vertices.sparkSession.sparkContext)
-        raise
-    if _state["auto_spill"] and _state["ckdir"] and _step[0]:
-        # The auto spill was internal cliff-avoidance: re-pin the final
-        # labels with ONE localCheckpoint (the measured cliff is per-chain)
-        # so nothing references the spill files, then reclaim the dir —
-        # the caller asked for the executor-block-backed contract.
-        labels = labels.localCheckpoint(eager=True)
-        _reclaim_auto_spill(vertices.sparkSession.sparkContext)
-    return labels, rounds
-
-
-def _observed_changed(obs, timeout_sec: float = 10.0):
-    """Read an Observation's ``chg`` with a bounded wait.  ``Observation.get``
-    blocks until the listener fires; if the materializing action did not
-    route through the listener (not observed on Spark 4.1, but the old
-    localCheckpoint caveat earned a guard) this returns None after
-    ``timeout_sec`` and the caller falls back to an explicit aggregate."""
-    import threading
-
-    res: dict = {}
-
-    def _get():
-        try:
-            res["v"] = obs.get["chg"]
-        except Exception:  # pragma: no cover - surfaced via fallback
-            pass
-
-    th = threading.Thread(target=_get, daemon=True)
-    th.start()
-    th.join(timeout_sec)
-    if "v" in res:
-        return int(res["v"] or 0)
-    return None
-
-
-def _propagate(edges, labels, max_rounds, _materialize, _state, telemetry):
-    import time as _time
-
-    changed = None
-    rounds = 0
-    for _ in range(max_rounds):
-        rounds += 1
-        _rt0 = _time.perf_counter()
-        # ONE join + ONE aggregation per step (r9): the edge pin carries a
-        # self-loop per vertex, so min(peer_keeper) over a vertex's edge
-        # rows IS least(own keeper, neighbor-min) — no separate labels⟕neigh
-        # join, no coalesce.  old_keeper (for the convergence count) is the
-        # self-loop row's peer_keeper, recovered with a conditional min in
-        # the same aggregation.
-        stepped = (
-            edges.join(labels.select(F.col("vec_id").alias("peer"),
-                                     F.col("keeper_id").alias("peer_keeper")), "peer")
-            .groupBy("vec_id")
-            .agg(F.min("peer_keeper").alias("k1"),
-                 F.min(F.when(F.col("peer") == F.col("vec_id"),
-                              F.col("peer_keeper"))).alias("old_keeper"))
-        )
-        # Pointer jump THROUGH THIS ROUND'S mapping (r9): k1 is itself a
-        # vec_id, and ``stepped`` maps every vertex to its post-neighbor-min
-        # label, so composing stepped with itself applies v → m[m[v]] on the
-        # FRESH mapping — the previous form jumped through the PREVIOUS
-        # round's labels (m_prev[m_new[v]]), one round stale.  Same exact
-        # fixpoint (per-component min; tests/test_connected_components.py),
-        # same join count, measured at sf1: 20 → 18 rounds.  The residual
-        # tail (changed 2-5/round) is the neighbor-min WAVEFRONT along long
-        # graph paths — information moves one edge per round no matter how
-        # labels are compressed — which is why r6's extra label³ hop bought
-        # nothing and was reverted.
-        jump = stepped.select(F.col("vec_id").alias("k1"), F.col("k1").alias("k1_keeper"))
-        flagged = (
-            stepped.join(jump, "k1", "left")
-            .select("vec_id",
-                    F.least(F.col("k1"), F.coalesce(F.col("k1_keeper"), F.col("k1")))
-                    .alias("keeper_id"),
-                    "old_keeper")
-            .withColumn("chg", (F.col("keeper_id") != F.col("old_keeper")).cast("int"))
-        )
-        obs = Observation(f"cc-chg-{rounds}-{id(flagged)}")
-        flagged = flagged.observe(obs, F.sum("chg").cast("bigint").alias("chg"))
-        flagged = _materialize(flagged)  # the round's single materializing action
-        # r9: the Observation fires on BOTH materialize paths in Spark 4.1
-        # (measured — the eager localCheckpoint runs a normal job through
-        # the listener), so the convergence count rides the round's single
-        # action; the explicit aggregate remains only as a bounded-wait
-        # fallback in case a future Spark stops firing it.
-        changed = _observed_changed(obs)
-        if changed is None:  # pragma: no cover - listener regression guard
-            changed = flagged.agg(F.sum("chg")).collect()[0][0] or 0
-        labels = flagged.select("vec_id", "keeper_id")
-        if telemetry is not None:
-            telemetry["round_walls_sec"].append(round(_time.perf_counter() - _rt0, 3))
-            telemetry["changed_per_round"].append(int(changed))
-        if changed == 0:
-            break
-    if changed:
-        raise RuntimeError(
-            f"connected components did not converge in {max_rounds} rounds "
-            f"({changed} labels still changing) — with pointer jumping this means "
-            f"component diameter > 2^{max_rounds}; raise max_rounds"
-        )
-    return labels, rounds, changed
+    Near-dup edges only join vectors of one bucket, so every component lies
+    inside one bucket and the whole query is q42's bucket kernel plus one
+    per-bucket pass: score the bucket's pairs, label its components in
+    NumPy (veckernels.component_min_labels), emit a keeper for every row.
+    One shuffle, no iteration, and nothing runs until the caller acts."""
+    # Bucket-local components are exact under two conditions: each row gets
+    # exactly one bucket (one hash table), and vec_id is the table's key
+    # (pair_sims_e6 already assumes it).  Multi-table LSH would need a merge
+    # pass over bucket representatives; this query has one table.
+    return _bucketed(load(spark, sf_dir, "embeddings"), N_PLANES) \
+        .groupBy("bucket").applyInPandas(
+            _near_dup_keepers, schema="vec_id long, keeper_id long")
 
 
 # Composes ORACLE_Q42 as a subquery (single source of truth for the pair

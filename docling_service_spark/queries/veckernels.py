@@ -33,6 +33,7 @@ __all__ = [
     "lsh_bucket_ids",
     "pair_sims_e6",
     "cosine_sim_e6",
+    "component_min_labels",
     "double_to_long",
     "doubles_to_list_array",
 ]
@@ -43,13 +44,17 @@ _I64_MIN = np.iinfo(np.int64).min
 
 def double_to_long(x: np.ndarray) -> np.ndarray:
     """float64 → int64 with the JVM's Double.toLong semantics (NaN → 0,
-    ±inf saturates) — the exact twin of Spark's floor-result long and
-    double→bigint casts, so NaN/inf edge rows cannot silently diverge."""
+    out-of-range values and ±inf saturate) — the exact twin of Spark's
+    floor-result long and double→bigint casts, so NaN/inf edge rows cannot
+    silently diverge.  Saturation is by mask, not ``np.clip``:
+    ``float(INT64_MAX)`` rounds up to 2^63, which would wrap again."""
     out = np.zeros(x.shape, dtype=np.int64)
-    finite = np.isfinite(x)
-    out[finite] = x[finite].astype(np.int64)
-    out[x == np.inf] = _I64_MAX
-    out[x == -np.inf] = _I64_MIN
+    high = x >= 2.0 ** 63
+    low = x < -2.0 ** 63
+    inside = ~(high | low | np.isnan(x))
+    out[inside] = x[inside].astype(np.int64)
+    out[high] = _I64_MAX
+    out[low] = _I64_MIN
     return out
 
 
@@ -169,3 +174,45 @@ def cosine_sim_e6(P: np.ndarray, C: np.ndarray) -> np.ndarray:
         seq_dot(P, C) / (np.sqrt(seq_dot(P, P)) * np.sqrt(seq_dot(C, C)))
         * 1000000.0
     )
+
+
+def component_min_labels(ids: np.ndarray, id_a: np.ndarray,
+                         id_b: np.ndarray) -> np.ndarray:
+    """Connected-component label per vertex: the smallest id reachable from
+    it over the undirected edges ``(id_a[k], id_b[k])``.  ``ids`` holds
+    distinct vertex ids in any order; every edge endpoint must be one of
+    them.  Returns an int64 array aligned with ``ids``.
+
+    Min-label propagation with pointer jumping over local indices (sorted
+    position, so the smallest index is the smallest id): each round hooks
+    every edge's larger label onto its smaller one, then jumps labels to
+    their roots.  Labels only decrease and every label stays inside its
+    vertex's component, so the loop ends when a round changes nothing —
+    no round cap is needed."""
+    ids = np.asarray(ids, dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    sorted_ids = ids[order]
+    n = len(ids)
+    lab = np.arange(n)
+    if n and len(id_a):
+        a = np.minimum(np.searchsorted(sorted_ids, id_a), n - 1)
+        b = np.minimum(np.searchsorted(sorted_ids, id_b), n - 1)
+        if not (np.array_equal(sorted_ids[a], id_a)
+                and np.array_equal(sorted_ids[b], id_b)):
+            raise ValueError("component_min_labels: an edge endpoint is not in ids")
+        while True:
+            prev = lab
+            lo = np.minimum(lab[a], lab[b])
+            hi = np.maximum(lab[a], lab[b])
+            lab = lab.copy()
+            np.minimum.at(lab, hi, lo)
+            while True:  # pointer jumping until every label is a root
+                jumped = lab[lab]
+                if np.array_equal(jumped, lab):
+                    break
+                lab = jumped
+            if np.array_equal(lab, prev):
+                break
+    out = np.empty(n, dtype=np.int64)
+    out[order] = sorted_ids[lab]
+    return out

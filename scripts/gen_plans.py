@@ -134,15 +134,13 @@ PLAN_NOTES = [
      "JVM rows.  cluster stays the vector table's natural partition key, "
      "so at scale the single Exchange is the co-location shuffle."),
     ("q43_embedding_near_dup_keepers",
-     "Connected-component keepers: the plan below is a bare checkpoint scan "
-     "BY DESIGN — each pointer-jumping round ends in one materializing "
-     "localCheckpoint (or parquet spill with checkpoint_dir=), so the "
-     "returned labels never drag the iterative join chain behind them; "
-     "per-round cost is 2 bounded joins + 1 aggregate on uniform keys (r9: "
-     "self-loop edges fold the own-vs-neighbor least into the aggregation, "
-     "the jump composes the CURRENT round's mapping, and the convergence "
-     "count rides the checkpoint's own Observation), O(log diameter) "
-     "rounds."),
+     "Near-dup component keepers, bucket-local: MapInArrow buckets every "
+     "vector, ONE Exchange on bucket, and a per-bucket FlatMapGroupsInPandas "
+     "kernel scores the bucket's pairs at the near-dup threshold and labels "
+     "its components in NumPy, emitting (vec_id, keeper_id) for every row.  "
+     "Near-dup edges never leave a bucket (one LSH table), so no component "
+     "spans two groups: no iterative join loop, no checkpoint, and the plan "
+     "stays lazy until the caller acts."),
     ("q51_frame_sample",
      "Frame sampling: columnar scan feeds mapInPandas directly — the 1-to-"
      "many fan-out (variable rows per video) happens INSIDE the Arrow "

@@ -114,32 +114,6 @@ def main() -> None:
         return jaccard_pairs(load(spark, sf_dir, "documents"),
                              max_df=64, df_sample_mod=4)
 
-    def _q43_instrumented(spark, sf_dir):
-        # r5 verdict #3: q43's sf1 wall (72.5 s) was 17x the sf0.1 wall for
-        # 10x data — decompose it.  Same logic as q43, but with the CC
-        # telemetry hook: per-round wall + changed-label counts separate the
-        # per-round fixed job latency (rounds x constant) from data-volume
-        # cost (wall growing with rows).
-        from docling_service_spark.queries.common import load
-        from docling_service_spark.queries.similarity import (
-            NEAR_DUP_SIM_E6,
-            connected_components,
-            q42_lsh_bucketed_neighbors,
-        )
-
-        tele: dict = {}
-        t0 = time.perf_counter()
-        pairs = q42_lsh_bucketed_neighbors(spark, sf_dir).filter(
-            F.col("sim_e6") >= NEAR_DUP_SIM_E6)
-        emb = load(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").cast("bigint").alias("vec_id"))
-        labels, rounds = connected_components(emb, pairs, telemetry=tele)
-        n = labels.count()
-        tele.update({"rounds": rounds, "rows": n,
-                     "total_wall_sec": round(time.perf_counter() - t0, 2)})
-        print(json.dumps({"q43_round_breakdown": tele}), flush=True)
-        return labels
-
     def _lib_ivf2_rule_sized(spark, sf_dir):
         # r6 verdict #2: the two-level trainer at RULE-sized k — ivf_k_for
         # (20k) = 79 → split 9x9 — runs the applyInPandas fine trainer and
@@ -210,8 +184,6 @@ def main() -> None:
     if args.queries == ",".join(PROBE_QUERIES):  # default = everything
         wanted = PROBE_QUERIES + list(lib)
     probes = {name: lib.get(name) or QUERIES[name] for name in wanted}
-    if "q43_embedding_near_dup_keepers" in probes:
-        probes["q43_embedding_near_dup_keepers"] = _q43_instrumented
     for name, fn in probes.items():
         walls, rows, err = [], None, None
         for rep in range(max(1, args.repeats)):

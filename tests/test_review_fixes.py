@@ -1,6 +1,6 @@
 """Regression tests for the round-2 self-review findings: source-change
 upserts, late-event sessionizer policy, env-var master precedence, commit
-tmp hygiene, family-consistent source extensions, CC input validation."""
+tmp hygiene, family-consistent source extensions."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from docling_service_spark.corpus import _FAMILY_EXT, build_doc, source_meta
-from docling_service_spark.queries.similarity import connected_components
 from docling_service_spark.schemas import INPUT_SCHEMA_WITH_SOURCE
 from docling_service_spark.sparkio.checkpoint import (
     SnapshotStore,
@@ -126,13 +125,6 @@ def test_source_extension_matches_family():
         src = source_meta(idx, f"doc-42-{idx:08d}")
         ext = _FAMILY_EXT[idx % len(_FAMILY_EXT)]
         assert (src["original_name"] or src["value"]).endswith(ext)
-
-
-def test_connected_components_rejects_dangling_endpoints(spark):
-    verts = spark.range(3).select(F.col("id").alias("vec_id"))
-    pairs = spark.createDataFrame([(1, 99)], "id_a bigint, id_b bigint")
-    with pytest.raises(ValueError, match="missing from vertices"):
-        connected_components(verts, pairs)
 
 
 def test_oracle_q60_zip_import_guard(monkeypatch):
