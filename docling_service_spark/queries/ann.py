@@ -4,23 +4,24 @@ column: k-means coarse quantizer + cluster-restricted exact search.
 This is the classic big-data ANN layout (FAISS IVF-Flat shape) expressed
 Spark-first:
 
-- **Train** (q44): Lloyd's k-means via DataFrame ops — assignment is a pure
-  columnar argmin over k centroid distances (no UDF), the update is one
-  groupBy with 64 per-dimension averages (single shuffle per iteration).
-  Centroids live on the driver between iterations (k x 64 doubles — the
-  standard MLlib-style pattern; they are broadcast INTO expressions as
-  literals, so executors never see python loops).
-- **Search** (q45): probes route to their ``nprobe`` nearest centroids via
-  a Spark expression (array_sort over (dist, idx) structs — no driver
-  compute), candidates are the union of those clusters' vectors (a
-  partition-pruned semi-join at scale: cluster is the natural partition key
-  of the vector table), and the exact cosine top-k runs only within
-  candidates.  At 100 TB this is the difference between scanning everything
-  per probe (q40) and scanning ``nprobe/k`` of it.
+- **Train** (q44): Lloyd's k-means — assignment is the zero-shuffle NumPy
+  argmin kernel (``_assign_arrow``, a ``mapInArrow`` over the data), the
+  update is one groupBy with 64 per-dimension averages (single shuffle per
+  iteration).  Centroids live on the driver between iterations (k x 64
+  doubles — the standard MLlib-style pattern) and travel to executors in
+  the kernel's closure.
+- **Search** (q45): probes route to their ``nprobe`` nearest centroids in
+  one NumPy kernel over the probes (``veckernels.nearest_centroids``:
+  (dist, idx) order, no driver compute), candidates are the union of those
+  clusters' vectors (a partition-pruned semi-join at scale: cluster is the
+  natural partition key of the vector table), and the exact cosine top-k
+  runs only within candidates.  At 100 TB this is the difference between
+  scanning everything per probe (q40) and scanning ``nprobe/k`` of it.
 
 k-means TRAINING is iterative and FP-order sensitive, so the live-training
 path is pytest-covered (argmin vs a NumPy recomputation, recall@k vs the
-q40 brute-force oracle) rather than oracled.  Quantizer APPLICATION —
+q40 brute-force oracle, live == frozen centroids at sf0.01) rather than
+oracled.  Quantizer APPLICATION —
 assignment (q44), probe routing + cluster-restricted search (q45), and
 same-cluster pairing (q46) — is a pure static function of the input once
 the quantizer is frozen, so all three driver queries run against the
@@ -35,7 +36,7 @@ from pyspark.sql.window import Window
 
 from .common import load
 from .ivf_centroids import FROZEN_CENTROIDS
-from .similarity import (DIM, TOP_K, _dot, _make_group_pairs_fn, rank_topk,
+from .similarity import (DIM, TOP_K, _make_group_pairs_fn, rank_topk,
                          score_cosine_pairs)
 
 IVF_K = 16        # coarse clusters (DRIVER queries: pinned for static-oracle
@@ -81,46 +82,11 @@ def ivf_k_for(n_vecs: int, target: int = TARGET_CLUSTER_SIZE) -> int:
 TRAIN_SAMPLE_TARGET = IVF_K * 256
 
 
-def _sq_dist(emb_col, centroid: list) -> "F.Column":
-    w = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(emb_col, w, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _dist_structs(emb_col, centroids: list[list[float]]):
-    """Array of (dist, cluster-idx) structs against centroid LITERALS — the
-    single source for both the argmin (_assign) and the nprobe routing
-    (array_sort in ivf_ann_topk), so the tie-break and the fold expression
-    cannot drift between them."""
-    return F.array(*[
-        F.struct(_sq_dist(emb_col, c).alias("d"), F.lit(j).alias("c"))
-        for j, c in enumerate(centroids)
-    ])
-
-
-# Above this k the literal-expression argmin stops being the right plan: the
-# projection embeds k·DIM literal doubles and Catalyst planning cost grows
-# with expression size.  _assign (and ivf_ann_topk's probe routing) switch to
-# a broadcast-join + struct-min/window form — same values, same tie-break,
-# same n·k distance work, but the centroids travel as DATA (one small
-# broadcast table) instead of plan nodes.
-_MAX_EXPR_K = 128
-
-
-def _centroids_df(spark, centroids: list[list[float]]):
-    return spark.createDataFrame(
-        [(j, [float(x) for x in c]) for j, c in enumerate(centroids)],
-        "c int, w array<double>",
-    )
-
-
 def _sq_dist_to_w():
     """Distance of the ``embedding`` column to the joined centroid row's
-    ``w`` column — the join-path twin of _sq_dist (identical fold, so the
-    two paths are value-identical to the float bit)."""
+    ``w`` column, for quantizers that are DataFrames (the two-level
+    trainer, assign_ivf_2level and q48's routing).  The same sequential
+    fold as veckernels.nearest_centroids and the oracles' ``_sql_dist``."""
     return F.aggregate(
         F.zip_with(F.col("embedding"), F.col("w"),
                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
@@ -147,35 +113,15 @@ def _assign_df(emb, cents):
                        F.col("b.c").alias("cluster"), F.col("b.d").alias("sq_dist"))
 
 
-def _assign_via_join(emb, centroids: list[list[float]]):
-    return _assign_df(emb, _centroids_df(emb.sparkSession, centroids))
-
-
-def _assign(emb, centroids: list[list[float]]):
-    """vec_id, embedding, cluster, sq_dist — argmin via array_min over
-    (dist, idx) structs (struct ordering compares dist first, idx breaks
-    ties deterministically).  k ≤ _MAX_EXPR_K uses the zero-shuffle literal
-    expression; larger quantizers (rule-sized k at real scale) use the
-    broadcast-join form with the same values and tie-break."""
-    if len(centroids) <= _MAX_EXPR_K:
-        best = F.array_min(_dist_structs(F.col("embedding"), centroids))
-        return emb.select("vec_id", "embedding",
-                          best["c"].alias("cluster"), best["d"].alias("sq_dist"))
-    return _assign_via_join(emb, centroids)
-
-
-# --- Arrow-native assignment kernels (round-9 optimization, guide §4.2) -----
+# --- Arrow-native assignment kernels (guide §4.2) ----------------------------
 #
-# The literal-expression argmin is evaluated by Catalyst's INTERPRETED
-# higher-order-function path: k·DIM lambda invocations per row (plus a
-# duplicate evaluation under the isnotnull filter the optimizer inserts).
-# Measured at sf1 (20k vectors, k=16): q44 3.3 s — ~1 µs per element op.
-# The kernels below hand whole Arrow batches to NumPy instead; the fold
-# order is preserved exactly (sequential across dims, vectorized across
-# rows — see veckernels.py), so outputs are bit-identical and the DuckDB
-# oracles stay green.  The JVM expression paths remain (parity tests pin
-# the two bit-for-bit) and large-k library callers still get the
-# broadcast-join form.
+# A literal-expression argmin runs on Catalyst's INTERPRETED higher-order-
+# function path: k·DIM lambda invocations per row, measured at sf1 (20k
+# vectors, k=16) as q44 3.3 s — ~1 µs per element op.  The kernels below
+# hand whole Arrow batches to NumPy instead, with the oracles' fold order
+# (sequential across dims, vectorized across rows — see veckernels.py), so
+# outputs are bit-identical to the DuckDB oracles.  Every quantizer given as
+# a Python list runs here, at any k.
 
 _ASSIGN_DDL_Q44 = "vec_id long, cluster long, sq_dist_e6 long"
 _ASSIGN_DDL_PASS = "vec_id long, cluster int, embedding array<float>"
@@ -215,8 +161,8 @@ def _make_assign_arrow_kernel(centroids: list, passthrough: bool):
 
 
 def _assign_arrow(emb, centroids: list, *, passthrough: bool = True):
-    """(vec_id, cluster[, embedding]) via the NumPy argmin kernel — the
-    zero-shuffle Arrow twin of ``_assign`` (bit-identical values)."""
+    """(vec_id, cluster[, embedding]) via the NumPy argmin kernel: zero
+    shuffles, (dist, idx) tie-break with NaN distances last."""
     ddl = _ASSIGN_DDL_PASS if passthrough else _ASSIGN_DDL_Q44
     return emb.select("vec_id", "embedding").mapInArrow(
         _make_assign_arrow_kernel(centroids, passthrough), ddl)
@@ -320,9 +266,6 @@ def training_sample(emb, n_vecs: int, target: int = TRAIN_SAMPLE_TARGET):
     return emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_SAMPLE_MOD)) < threshold)
 
 
-_LARGE_K_WARNED = [False]
-
-
 def train_ivf(spark, sf_dir, *, k: int | None = IVF_K,
               iters: int = IVF_ITERS) -> list[list[float]]:
     """Lloyd's k-means; returns the centroid list.  Deterministic: init =
@@ -330,14 +273,10 @@ def train_ivf(spark, sf_dir, *, k: int | None = IVF_K,
     also makes memoizing per (sf_dir, k, iters) safe: a q44+q45 sweep trains
     once instead of paying the iteration jobs twice.
 
-    **Above ``_MAX_EXPR_K`` the flat path is the documented-worse choice**
-    (r7 sf1 measurement: flat k=160 through the join-switch assignment took
-    308.6 s where ``train_ivf_2level`` + ``assign_ivf_2level`` at comparable
-    product k took 39.8 s — ~8×; BENCH/SF1_PROBE.md): past the literal-
-    expression ceiling every distance is a join-side fold of all k
-    centroids, while the hierarchy folds only k₁+k₂ ≈ 2√k.  A one-shot
-    runtime warning points callers at the two-level trainer; the flat path
-    stays fully supported as the parity baseline and for k ≤ _MAX_EXPR_K.
+    Each Lloyd step assigns with the NumPy argmin kernel (``_assign_arrow``)
+    and averages per dimension in one groupBy.  Flat assignment costs n·k
+    distance folds against the hierarchy's n·(k₁+k₂) ≈ n·2√k, so at large k
+    ``train_ivf_2level`` is the scalable trainer.
 
     ``k=None`` sizes the quantizer by the occupancy rule ``ivf_k_for(n)``.
     The default stays pinned at IVF_K so the shipped frozen quantizer
@@ -364,17 +303,6 @@ def train_ivf(spark, sf_dir, *, k: int | None = IVF_K,
     n_vecs = emb.count()
     if k is None:
         k = ivf_k_for(n_vecs)
-    if k > _MAX_EXPR_K and not _LARGE_K_WARNED[0]:
-        _LARGE_K_WARNED[0] = True
-        import warnings
-
-        warnings.warn(
-            f"train_ivf at k={k} > _MAX_EXPR_K={_MAX_EXPR_K}: the flat path "
-            "measured ~8x slower than the two-level hierarchy at this scale "
-            "(sf1: 308.6 s vs 39.8 s; BENCH/SF1_PROBE.md) and holds all k "
-            "centroids on the driver — prefer train_ivf_2level / "
-            "assign_ivf_2level unless you need the flat parity baseline",
-            stacklevel=2)
     init = emb.filter(F.col("vec_id") < k).orderBy("vec_id").collect()
     centroids = [[float(x) for x in r["embedding"]] for r in init]
 
@@ -383,7 +311,7 @@ def train_ivf(spark, sf_dir, *, k: int | None = IVF_K,
                 for i in range(DIM)]
     try:
         for _ in range(iters):
-            agg = _assign(train, centroids).groupBy("cluster").agg(*dim_avgs).collect()
+            agg = _assign_arrow(train, centroids).groupBy("cluster").agg(*dim_avgs).collect()
             by_cluster = {r["cluster"]: [r[f"d{i}"] for i in range(DIM)] for r in agg}
             centroids = [by_cluster.get(j, centroids[j]) for j in range(k)]  # empty cluster keeps its centroid
     finally:
@@ -427,7 +355,7 @@ def train_ivf(spark, sf_dir, *, k: int | None = IVF_K,
 # tie-break of the flat path at each level.  With k₁ = 1 the hierarchy
 # degenerates to flat k-means over the same deterministic sample and init
 # (k lowest vec_ids), which is the parity gate pinning the NumPy trainer to
-# the DataFrame trainer (tests/test_ivf_2level.py).
+# the flat trainer (tests/test_ivf_2level.py).
 
 FINE_SAMPLE_PER_CENTROID = 256  # mirrors TRAIN_SAMPLE_TARGET's per-centroid budget
 FINE_TRAIN_CAP = 1 << 20        # hard per-cell row cap (worker-memory guard)
@@ -499,12 +427,13 @@ def _lloyd_df(train, cents, iters: int):
 
 
 def _numpy_lloyd(X, ids, k2: int, iters: int):
-    """Per-cell NumPy Lloyd, semantics-identical to the DataFrame loop:
-    init = the k₂ lowest vec_ids of the cell, argmin takes the LOWEST
-    cluster index on ties (np.argmin keeps the first minimum — the (dist,
-    idx) struct-min rule), empty clusters keep their centroid, fixed
-    iteration count."""
+    """Per-cell NumPy Lloyd, semantics-identical to the flat loop: init =
+    the k₂ lowest vec_ids of the cell, assignment is the shared
+    veckernels.assign_argmin (sequential fold, (dist, idx) tie-break with
+    NaN last), empty clusters keep their centroid, fixed iteration count."""
     import numpy as np
+
+    from docling_service_spark.queries.veckernels import assign_argmin
 
     order = np.argsort(ids, kind="stable")
     k_eff = min(k2, len(ids))
@@ -512,9 +441,7 @@ def _numpy_lloyd(X, ids, k2: int, iters: int):
     assign = np.empty(len(X), dtype=np.int64)
     for _ in range(iters):
         for s in range(0, len(X), 8192):  # chunked: never an m×k₂ full matrix
-            xb = X[s:s + 8192]
-            d = ((xb[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign[s:s + 8192] = d.argmin(axis=1)
+            assign[s:s + 8192], _ = assign_argmin(X[s:s + 8192], C)
         for j in range(k_eff):
             m = assign == j
             if m.any():
@@ -619,9 +546,6 @@ def q44_ivf_assignments(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
     )
-    # r9: one zero-shuffle Arrow kernel replaces the interpreted k·DIM
-    # literal-fold argmin (bit-identical; JVM twin pinned by
-    # tests/test_veckernels.py).
     return _assign_arrow(emb, FROZEN_CENTROIDS, passthrough=False)
 
 
@@ -653,49 +577,55 @@ FROM asg
 """
 
 
+_ROUTE_DDL = "probe_id long, pe array<float>, cluster int"
+
+
+def _make_route_arrow_kernel(centroids: list, n_probe: int):
+    """mapInArrow kernel over the probes: one ``(probe_id, pe, cluster)`` row
+    per route, the ``n_probe`` nearest centroids in (dist, idx) order
+    (veckernels.nearest_centroids, the same fold and order as the argmin)."""
+    C = [[float(x) for x in c] for c in centroids]
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        from docling_service_spark.queries.veckernels import (
+            list_to_matrix, nearest_centroids)
+
+        Cm = np.array(C, dtype=np.float64)
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            X = list_to_matrix(b.column("embedding"), Cm.shape[1])
+            idx, _ = nearest_centroids(X, Cm, n_probe)
+            rows = pa.array(np.repeat(np.arange(b.num_rows), idx.shape[1]))
+            yield pa.RecordBatch.from_arrays(
+                [b.column("vec_id").take(rows), b.column("embedding").take(rows),
+                 pa.array(idx.reshape(-1).astype(np.int32))],
+                ["probe_id", "pe", "cluster"])
+
+    return kernel
+
+
 def ivf_ann_topk(spark, sf_dir, centroids: list[list[float]]):
     """IVF search against an explicit quantizer: probe → nprobe nearest
     clusters → exact cosine top-k within candidates only.
 
-    Routing is a Spark expression, not driver Python: each probe's distances
-    to all k centroid literals sort as (dist, idx) structs (array_sort —
-    struct ordering is the same deterministic tie-break as the argmin), and
-    the first N_PROBE become the probe's routes.  The route table is
-    k-bounded (N_QUERIES × N_PROBE rows), so broadcasting it is safe at any
-    corpus scale; candidates stream past it (at 100 TB, ``cluster`` is the
-    vector table's partition key, so the route join prunes partitions)."""
+    Routing runs on the executors, not in driver Python: one NumPy kernel
+    over the probes emits each probe's N_PROBE nearest centroids in (dist,
+    idx) order — the same fold and tie-break as the assignment argmin.  The
+    route table is k-bounded (N_QUERIES × N_PROBE rows), so broadcasting it
+    is safe at any corpus scale; candidates stream past it (at 100 TB,
+    ``cluster`` is the vector table's partition key, so the route join
+    prunes partitions).  Both kernels carry the k·DIM centroid doubles in
+    their closure, the footprint the list-of-centroids API already implies."""
     emb = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
     )
-    # r9: Arrow-kernel assignment (bit-identical to _assign) for any
-    # driver-listed quantizer; the closure carries k·DIM doubles, which is
-    # exactly the footprint the list-of-centroids API already implies.
     assigned = _assign_arrow(emb, centroids)
-
-    probes = emb.filter(F.col("vec_id") < N_QUERIES)
-    if len(centroids) <= _MAX_EXPR_K:
-        dists = _dist_structs(F.col("embedding"), centroids)
-        routes = (
-            probes.select(F.col("vec_id").alias("probe_id"),
-                          F.col("embedding").alias("pe"),
-                          F.explode(F.slice(F.array_sort(dists), 1, N_PROBE)).alias("r"))
-            .select("probe_id", "pe", F.col("r.c").cast("int").alias("cluster"))
-        )
-    else:
-        # Large-k routing mirrors _assign_via_join: centroids as a broadcast
-        # table, rank-per-probe window with the same (dist, idx) tie-break —
-        # no k·DIM literals in the plan (the _MAX_EXPR_K rationale).
-        cents = _centroids_df(spark, centroids)
-        rw = Window.partitionBy("probe_id").orderBy("d", "c")
-        routes = (
-            probes.crossJoin(F.broadcast(cents))
-            .select(F.col("vec_id").alias("probe_id"),
-                    F.col("embedding").alias("pe"),
-                    _sq_dist_to_w().alias("d"), F.col("c"))
-            .withColumn("rn", F.row_number().over(rw))
-            .filter(F.col("rn") <= N_PROBE)
-            .select("probe_id", "pe", F.col("c").cast("int").alias("cluster"))
-        )
+    routes = emb.filter(F.col("vec_id") < N_QUERIES).mapInArrow(
+        _make_route_arrow_kernel(centroids, N_PROBE), _ROUTE_DDL)
     cands = assigned.join(F.broadcast(routes), "cluster").select(
         "probe_id", "pe", F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
     )
@@ -793,8 +723,8 @@ def q47_ivf2_assignments(spark, sf_dir):
 
 
 def _sql_dist(a: str, b: str) -> str:
-    """Squared-distance fold in DuckDB SQL — the sequential 64-element fold
-    twin of _sq_dist/_sq_dist_to_w (same order, same casts)."""
+    """Squared-distance fold in DuckDB SQL — the same sequential 64-element
+    fold as veckernels.nearest_centroids and _sq_dist_to_w."""
     return (f"list_aggregate(list_transform(generate_series(1, {DIM}), "
             f"i -> ({a}[i]::DOUBLE - {b}[i]) * ({a}[i]::DOUBLE - {b}[i])), 'sum')")
 
@@ -849,8 +779,8 @@ FROM a2
 # --- q48: two-level IVF ANN search (hierarchical descent) -------------------
 #
 # q45's routing evaluates every probe against the FULL centroid list — fine
-# at k = 16, impossible at rule-sized k ≈ 4·10⁹ (10^12 vectors): neither the
-# k·DIM literal expression nor the k-row broadcast survives (r6 verdict #1).
+# at k = 16, impossible at rule-sized k ≈ 4·10⁹ (10^12 vectors): a k·DIM
+# centroid list does not fit in a kernel closure (r6 verdict #1).
 # Hierarchical descent restores the two-level scaling law on the SEARCH side:
 #
 #   probe → nprobe₁ nearest COARSE cells        (k₁ distance folds)
@@ -880,7 +810,7 @@ def ivf2_ann_topk(spark, sf_dir, quant: IVF2Quantizer, *,
     tests/test_ivf2_ann.py.  ``_assigned`` lets the frozen-quantizer driver
     query (q48) substitute the zero-shuffle Arrow assignment for the
     DataFrame-quantizer path; candidate scoring runs through the Arrow
-    cosine kernel either way (bit-identical to the JVM fold)."""
+    cosine kernel either way (bit-identical to the oracle's fold)."""
     emb = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
     )
@@ -1001,8 +931,8 @@ def q46_ivf_cluster_pairs(spark, sf_dir):
     ``applyInPandas`` kernel normalizes + scores all (id_a < id_b) pairs in
     NumPy with the threshold applied in-kernel — the quadratic pair set
     never materializes as JVM rows and below-threshold pairs never cross
-    the Python→JVM boundary.  Bit-identical to the JVM join+fold path
-    (kept as ``_q46_jvm`` for the parity test)."""
+    the Python→JVM boundary.  Bit-identical to the oracle's cluster
+    self-join fold."""
     emb = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
     )
@@ -1010,45 +940,6 @@ def q46_ivf_cluster_pairs(spark, sf_dir):
     return assigned.groupBy("cluster").applyInPandas(
         _make_group_pairs_fn(SEMDEDUP_SIM_E6, "cluster"),
         schema="id_a long, id_b long, cluster long, sim_e6 long")
-
-
-def _q46_jvm(spark, sf_dir):
-    """The pre-round-9 JVM expression path — q46's parity twin
-    (tests/test_veckernels.py pins the two bit-for-bit).
-
-    Same normalize-ONCE-before-the-join discipline as the old q42,
-    INCLUDING its join barrier: inv_norm referenced only inside the
-    transform lambda gets CollapseProject-inlined and the DIM-element fold
-    re-evaluates per element (O(DIM²)/row — the trap similarity.py
-    documents); the join between the withColumn and the transform keeps
-    the cluster⋈norm shape rather than a fused single-projection one."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
-    )
-    clusters = _assign(emb, FROZEN_CENTROIDS).select("vec_id", "cluster")
-    normed = emb.withColumn(
-        "inv_norm", F.lit(1.0) / F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    )
-    nemb = F.transform(F.col("embedding"), lambda x: x.cast("double") * F.col("inv_norm"))
-    withn = clusters.join(normed, "vec_id").select("vec_id", "cluster", nemb.alias("nemb"))
-    a = withn.alias("a")
-    c = withn.alias("c")
-    sim = F.aggregate(
-        F.zip_with(F.col("a.nemb"), F.col("c.nemb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(c, (F.col("a.cluster") == F.col("c.cluster"))
-               & (F.col("a.vec_id") < F.col("c.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("c.vec_id").alias("id_b"),
-            F.col("a.cluster").cast("bigint").alias("cluster"),
-            F.floor(sim * 1_000_000).cast("bigint").alias("sim_e6"),
-        )
-        .filter(F.col("sim_e6") >= SEMDEDUP_SIM_E6)
-    )
 
 
 def _oracle_q46() -> str:

@@ -9,9 +9,9 @@ array<float>[64]).
   from (dim, plane) indices with integer arithmetic so both engines compute
   identical planes without a shared RNG.
 
-Scores are floor-scaled ints; element products are computed in double after
-an explicit cast from float32 in BOTH engines, and the fold is sequential in
-both, so values match exactly in practice.
+Scores are floor-scaled ints.  Spark computes them in NumPy kernels
+(veckernels.py) and DuckDB in the oracles; both widen float32 to double and
+fold sequentially over the dims, so the values match bit for bit.
 """
 
 from __future__ import annotations
@@ -55,22 +55,14 @@ def n_planes_for(n_vecs: int, target: int = TARGET_BUCKET_SIZE) -> int:
     return min(_MAX_PLANES, math.ceil(math.log2(n_vecs / target)))
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-# --- Arrow-native scoring/pairing kernels (round-9 optimization) -------------
+# --- Arrow-native scoring/pairing kernels ------------------------------------
 #
-# The per-pair cosine folds above are evaluated by Catalyst's INTERPRETED
-# higher-order-function path (~1 µs per element op measured at sf1) — the
-# dominant cost of q40/q42/q43/q45/q46/q48.  These kernels hand whole Arrow
-# batches to NumPy with the IDENTICAL fold order (sequential across dims,
-# vectorized across rows — veckernels.py), so results are bit-identical and
-# the static DuckDB oracles stay green.  JVM twins are kept for parity tests.
+# Catalyst evaluates a per-element fold (aggregate(zip_with(...))) on its
+# INTERPRETED higher-order-function path, ~1 µs per element op measured at
+# sf1.  These kernels hand whole Arrow batches to NumPy with the oracles'
+# fold order (sequential across dims, vectorized across rows —
+# veckernels.py), so results are bit-identical to the static DuckDB oracles,
+# which are the only parity reference.
 
 _SCORE_DDL = "probe_id long, neighbor_id long, sim_e6 long"
 
@@ -120,7 +112,8 @@ def _group_pair_sims(pdf, threshold_e6: int):
     ids sorted ascending, then all (id_a < id_b) pair sims at or above
     ``threshold_e6`` over raw float32 embeddings — normalize-once then the
     blocked sequential-fold pair kernel (veckernels.pair_sims_e6),
-    bit-identical to the JVM join+fold including the NaN→0 floor rule."""
+    bit-identical to the oracles' self-join fold, including the NaN→0 floor
+    rule."""
     import numpy as np
 
     from docling_service_spark.queries.veckernels import (
@@ -199,35 +192,11 @@ def hyperplane_weights(i: int, j: int) -> int:
     return (i * 37 + j * 101) % 13 - 6
 
 
-def bucket_column(n_planes: int, dim: int = DIM):
-    """Sign-random-projection bucket id over an ``embedding`` column.
-
-    Weights are baked in as LITERAL arrays: the sequence+element_at form
-    paid an index indirection per element (and the modular arithmetic) per
-    row.  ``n_planes`` follows ``n_planes_for`` at real scale; driver
-    queries pin N_PLANES for static-oracle parity (see module header)."""
-    def proj(j):
-        w = F.array(*[F.lit(float(hyperplane_weights(i, j))) for i in range(dim)])
-        return F.aggregate(
-            F.zip_with(F.col("embedding"), w, lambda x, wi: x.cast("double") * wi),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    bucket = None
-    for j in range(n_planes):
-        bit = F.when(proj(j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("bigint")
-
-
 def lsh_buckets(emb, *, n_planes: int = N_PLANES):
-    """Bucket every vector: the library entry point (parameterized planes)."""
-    return emb.select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        bucket_column(n_planes).alias("bucket"),
-        *(["label"] if "label" in emb.columns else []),
-    )
+    """Bucket every vector: the library entry point (parameterized planes).
+    ``n_planes`` follows ``n_planes_for`` at real scale; driver queries pin
+    N_PLANES for static-oracle parity (see module header)."""
+    return _bucketed(emb, n_planes, ("label",) if "label" in emb.columns else ())
 
 
 def q41_lsh_buckets(spark, sf_dir):
@@ -251,13 +220,10 @@ FROM embeddings
 """
 
 
-_BUCKET_DDL = "vec_id long, bucket long, embedding array<float>"
-
-
-def _make_bucket_arrow_kernel(n_planes: int):
-    """mapInArrow kernel: sign-random-projection bucket per vector (the
-    NumPy twin of bucket_column, identical fold order) with the raw
-    embedding passed through for the downstream pair kernel."""
+def _make_bucket_arrow_kernel(n_planes: int, passthrough: tuple[str, ...]):
+    """mapInArrow kernel: sign-random-projection bucket per vector, with the
+    ``passthrough`` columns copied through unchanged (the raw embedding for
+    the q42/q43 pair kernels, the label for q41)."""
     W = [[float(hyperplane_weights(i, j)) for j in range(n_planes)]
          for i in range(DIM)]
 
@@ -275,16 +241,24 @@ def _make_bucket_arrow_kernel(n_planes: int):
             X = list_to_matrix(b.column("embedding"), DIM)
             bucket = lsh_bucket_ids(X, Wm)
             yield pa.RecordBatch.from_arrays(
-                [b.column("vec_id"), pa.array(bucket), b.column("embedding")],
-                ["vec_id", "bucket", "embedding"])
+                [b.column("vec_id"), pa.array(bucket),
+                 *(b.column(c) for c in passthrough)],
+                ["vec_id", "bucket", *passthrough])
 
     return kernel
 
 
-def _bucketed(emb, n_planes: int):
-    """(vec_id, bucket, embedding) through the bucket Arrow kernel."""
-    return emb.select(F.col("vec_id").cast("bigint").alias("vec_id"), "embedding") \
-        .mapInArrow(_make_bucket_arrow_kernel(n_planes), _BUCKET_DDL)
+def _bucketed(emb, n_planes: int, passthrough: tuple[str, ...] = ("embedding",)):
+    """(vec_id, bucket, *passthrough) through the bucket Arrow kernel; the
+    passthrough columns keep their input types."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType([StructField("vec_id", LongType()),
+                         StructField("bucket", LongType()),
+                         *(emb.schema[c] for c in passthrough)])
+    cols = dict.fromkeys(("embedding", *passthrough))
+    return emb.select(F.col("vec_id").cast("bigint").alias("vec_id"), *cols) \
+        .mapInArrow(_make_bucket_arrow_kernel(n_planes, passthrough), schema)
 
 
 def lsh_bucketed_pairs(emb, *, n_planes: int = N_PLANES):
@@ -296,53 +270,12 @@ def lsh_bucketed_pairs(emb, *, n_planes: int = N_PLANES):
     normalized-double column), and a per-bucket ``applyInPandas`` kernel
     normalizes + scores all (id_a < id_b) pairs in NumPy — the quadratic
     pair set never materializes as JVM rows.  Values are bit-identical to
-    the JVM join+fold path (kept below as ``_lsh_bucketed_pairs_jvm`` and
-    pinned by tests/test_veckernels.py).  ``n_planes`` must track corpus
-    size (``n_planes_for``) to keep per-bucket pair counts flat — see
-    module header."""
+    ORACLE_Q42's self-join fold.  ``n_planes`` must track corpus size
+    (``n_planes_for``) to keep per-bucket pair counts flat — see module
+    header."""
     return _bucketed(emb, n_planes).groupBy("bucket").applyInPandas(
         _make_group_pairs_fn(0, None),
         schema="id_a long, id_b long, sim_e6 long")
-
-
-def _lsh_bucketed_pairs_jvm(emb, *, n_planes: int = N_PLANES):
-    """The pre-round-9 JVM expression path — the parity twin of
-    lsh_bucketed_pairs (bit-for-bit; tests/test_veckernels.py).
-
-    Vectors are L2-normalized ONCE before the self-join, so the per-pair
-    expression is a single 64-element dot product instead of three folds —
-    this is the pre-aggregation that makes bucketed ANN viable at scale
-    (pair count >> vector count).  ``n_planes`` must track corpus size
-    (``n_planes_for``) to keep per-bucket pair counts flat — see module
-    header."""
-    b = lsh_buckets(emb, n_planes=n_planes).select("vec_id", "bucket")
-    emb = emb.select(F.col("vec_id").cast("bigint").alias("vec_id"), "embedding")
-    # inv_norm MUST be a materialized column before the normalize transform:
-    # referencing it inside the per-element lambda re-evaluates the whole
-    # 64-element dot product per element (64x per row — the same Catalyst
-    # no-CSE-across-lambdas trap as the shingle tokenizer; see dedup.py).
-    emb = emb.withColumn(
-        "inv_norm", F.lit(1.0) / F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    )
-    nemb = F.transform(F.col("embedding"),
-                       lambda x: x.cast("double") * F.col("inv_norm"))
-    withb = b.join(emb, "vec_id").select("vec_id", "bucket", nemb.alias("nemb"))
-    a = withb.alias("a")
-    c = withb.alias("c")
-    sim = F.aggregate(
-        F.zip_with(F.col("a.nemb"), F.col("c.nemb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(c, (F.col("a.bucket") == F.col("c.bucket")) & (F.col("a.vec_id") < F.col("c.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("c.vec_id").alias("id_b"),
-            F.floor(sim * 1000000).cast("bigint").alias("sim_e6"),
-        )
-        .filter(F.col("sim_e6") >= 0)
-    )
 
 
 def q42_lsh_bucketed_neighbors(spark, sf_dir):

@@ -1,24 +1,26 @@
-"""Vectorized NumPy twins of the JVM embedding-expression folds (guide §4.2:
-hand whole Arrow batches to native code instead of interpreted per-element
-expression evaluation).
+"""Vectorized NumPy kernels for the embedding math (guide §4.2: hand whole
+Arrow batches to native code instead of interpreted per-element expression
+evaluation).  Every driver query whose quantizer or hyperplanes are Python
+lists (q40–q47) runs on these kernels; the Catalyst fold survives only where
+the quantizer is itself a DataFrame (ann._sq_dist_to_w).
 
 **The parity invariant.**  Every declared query's values are floor-scaled
-floats, so the optimized kernels must reproduce the Catalyst higher-order-
-function folds BIT-FOR-BIT, not approximately.  The trick: the JVM folds are
-sequential over the 64 dims (``aggregate(zip_with(...), 0.0, acc + x)``), so
-each kernel accumulates **sequentially across dims but vectorized across
-rows** — ``acc += X[:, i] * Y[:, i]`` performs, per row, the identical IEEE-754
-double multiply-then-add sequence as the Spark fold (NumPy does not fuse
-multiply-add, and float32→float64 widening is exact), so the results are
-bit-identical.  ``np.dot``/BLAS would NOT be (pairwise/SIMD summation reorders
-the adds); nothing here may use them.
+floats, so the kernels must reproduce the DuckDB oracles' sequential
+``list_aggregate`` folds BIT-FOR-BIT, not approximately.  Each kernel
+therefore accumulates **sequentially across dims but vectorized across
+rows** — ``acc += X[:, i] * Y[:, i]`` performs, per row, the identical
+IEEE-754 double multiply-then-add sequence as a left fold over the 64 dims
+(NumPy does not fuse multiply-add, and float32→float64 widening is exact).
+``np.dot``/BLAS would NOT be (pairwise/SIMD summation reorders the adds);
+nothing here may use them.
 
-Tie-breaks: ``np.argmin`` keeps the FIRST minimum — the same (dist, idx)
-struct-min rule as ``array_min``/``min(struct)`` in the JVM and the oracles.
+**NaN follows the JVM and DuckDB.**  Both order NaN above +inf and evaluate
+``NaN > 0`` as true: nearest-centroid order is (dist, idx) with NaN last
+(``nearest_centroids``), and a NaN projection sets its LSH bit.
 
-Every kernel here is pinned to its JVM twin by bit-for-bit parity tests
-(tests/test_veckernels.py) and by the sf0.01 DuckDB oracle mirror
-(tests/test_entry_contract.py).
+Every kernel is pinned to the DuckDB oracles: the sf0.01 mirror
+(tests/test_entry_contract.py), the sf0.1 kernel-query parity test and the
+NaN/inf edge cases (tests/test_veckernels.py).
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ __all__ = [
     "list_to_matrix",
     "seq_dot",
     "seq_inv_norm",
+    "nearest_centroids",
     "assign_argmin",
     "lsh_bucket_ids",
     "pair_sims_e6",
@@ -95,11 +98,17 @@ def seq_inv_norm(X: np.ndarray) -> np.ndarray:
     return 1.0 / np.sqrt(seq_dot(X, X))
 
 
-def assign_argmin(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(cluster, sq_dist) per row against centroid matrix ``C`` (k, dim).
+def nearest_centroids(X: np.ndarray, C: np.ndarray,
+                      m: int) -> tuple[np.ndarray, np.ndarray]:
+    """(idx, sq_dist), each (n, min(m, k)): every row's ``m`` nearest
+    centroids of ``C`` (k, dim) in (dist, idx) order.
 
-    Distance per centroid is the sequential ``(x-c)^2`` fold; argmin keeps
-    the first (lowest-index) minimum = the (d, c) struct-min tie-break."""
+    Distance per centroid is the sequential ``(x-c)^2`` fold.  The order is
+    the struct order of Spark's ``array_min`` and DuckDB's ``min({d, c})``:
+    NaN sorts above +inf and ties go to the lower index.  A stable argsort
+    gives exactly that (NumPy sorts NaN last, keeping index order), so an
+    all-NaN row ranks centroid 0 first; ``np.argmin`` would instead return
+    the first NaN."""
     n, k = X.shape[0], C.shape[0]
     D = np.empty((k, n))
     for j in range(k):
@@ -109,14 +118,23 @@ def assign_argmin(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]
             diff = X[:, i] - cj[i]
             acc += diff * diff
         D[j] = acc
-    cluster = np.argmin(D, axis=0)
-    return cluster.astype(np.int64), D[cluster, np.arange(n)]
+    D = D.T
+    idx = np.argsort(D, axis=1, kind="stable")[:, :m]
+    return idx.astype(np.int64), np.take_along_axis(D, idx, axis=1)
+
+
+def assign_argmin(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(cluster, sq_dist) per row: the first column of nearest_centroids."""
+    idx, d = nearest_centroids(X, C, 1)
+    return idx[:, 0], d[:, 0]
 
 
 def lsh_bucket_ids(X: np.ndarray, W: np.ndarray) -> np.ndarray:
     """Sign-random-projection bucket ids against weight matrix ``W``
     (dim, planes): bucket = Σ_j (proj_j > 0) · 2^j with the sequential
-    projection fold — the NumPy twin of similarity.bucket_column."""
+    projection fold.  A NaN projection (a NaN element, or an inf element
+    times a zero weight) sets its bit: Spark and DuckDB both evaluate
+    ``NaN > 0`` as true."""
     n = X.shape[0]
     bucket = np.zeros(n, dtype=np.int64)
     for j in range(W.shape[1]):
@@ -124,7 +142,8 @@ def lsh_bucket_ids(X: np.ndarray, W: np.ndarray) -> np.ndarray:
         wj = W[:, j]
         for i in range(X.shape[1]):
             acc += X[:, i] * wj[i]
-        bucket += np.where(acc > 0, np.int64(1) << j, np.int64(0))
+        bit = (acc > 0) | np.isnan(acc)
+        bucket += np.where(bit, np.int64(1) << j, np.int64(0))
     return bucket
 
 

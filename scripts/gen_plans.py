@@ -68,10 +68,10 @@ PLAN_NOTES = [
      "AQE picks SMJ and the two identical signature subplans collapse under "
      "the ReuseExchange rule."),
     ("q45_ivf_ann_topk",
-     "IVF ANN search (frozen quantizer; r9 kernels for assignment + scoring, "
-     "bit-identical): probe routing is a Spark expression "
-     "— distances to the k centroid LITERALS sort as (dist, idx) structs and "
-     "the first nprobe explode into a k-bounded route table (N_QUERIES x "
+     "IVF ANN search (frozen quantizer): assignment, probe routing and "
+     "scoring are NumPy kernels with the oracle's fold order.  Routing is a "
+     "MapInArrow over the probes that emits each probe's nprobe nearest "
+     "centroids in (dist, idx) order, a k-bounded route table (N_QUERIES x "
      "N_PROBE rows) that broadcasts safely at any corpus size; the exact "
      "cosine top-k runs only over the joined clusters' vectors — nprobe/k of "
      "the corpus scanned per probe instead of all of it.  At 100 TB, cluster "

@@ -134,15 +134,14 @@ def main() -> None:
             F.col("vec_id").cast("bigint").alias("vec_id"), "embedding")
         return assign_ivf_2level(emb, quant)
 
-    def _lib_flat_assign_join_switch(spark, sf_dir):
-        # Flat-path k > _MAX_EXPR_K (128): train at k=160 and assign via the
-        # broadcast-join form _assign switches to — the literal-expression
-        # plan would embed 160*64 doubles as plan nodes.  No probe ran this
-        # switch live before (driver queries pin k=16).
+    def _lib_flat_train_assign_k160(spark, sf_dir):
+        # Flat path at a k no driver query reaches (they pin k=16): train at
+        # k=160 and assign the full table with the NumPy argmin kernel, the
+        # flat counterpart of lib_ivf2_rule_sized.
         from docling_service_spark.queries.ann import (
             _CENTROID_CACHE,
             IVF_ITERS,
-            _assign,
+            _assign_arrow,
             train_ivf,
         )
         from docling_service_spark.queries.common import load
@@ -153,7 +152,7 @@ def main() -> None:
         cents = train_ivf(spark, sf_dir, k=160)
         emb = load(spark, sf_dir, "embeddings").select(
             F.col("vec_id").cast("bigint").alias("vec_id"), "embedding")
-        return _assign(emb, cents)
+        return _assign_arrow(emb, cents)
 
     def _lib_ivf2_search_rule_sized(spark, sf_dir):
         # r7 verdict #3: q48's hierarchical-descent SEARCH through the
@@ -179,7 +178,7 @@ def main() -> None:
     lib = {"lib_jaccard_full_sampled_df": _lib_jaccard,
            "lib_ivf2_rule_sized": _lib_ivf2_rule_sized,
            "lib_ivf2_search_rule_sized": _lib_ivf2_search_rule_sized,
-           "lib_flat_assign_join_switch": _lib_flat_assign_join_switch}
+           "lib_flat_train_assign_k160": _lib_flat_train_assign_k160}
     wanted = args.queries.split(",")
     if args.queries == ",".join(PROBE_QUERIES):  # default = everything
         wanted = PROBE_QUERIES + list(lib)

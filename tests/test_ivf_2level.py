@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from docling_service_spark.queries.ann import (
     IVF_K,
-    _assign,
+    _assign_arrow,
     assign_ivf_2level,
     ivf_k_for,
     ivf_split_for,
@@ -66,7 +66,7 @@ def test_flat_parity_with_k1_1(spark):
 
         emb = _emb(spark)
         flat_asg = {r["vec_id"]: r["cluster"]
-                    for r in _assign(emb, flat).collect()}
+                    for r in _assign_arrow(emb, flat).collect()}
         two_asg = {r["vec_id"]: r["cluster"]
                    for r in assign_ivf_2level(emb, quant).collect()}
         # Global cluster id with k1=1 is 0*k2 + fine = the flat index.

@@ -100,65 +100,8 @@ def test_ivf_recall_vs_bruteforce(spark):
             assert r["neighbor_id"] == r["probe_id"]
 
 
-def test_assign_via_join_matches_literal_path(spark):
-    """The broadcast-join assignment (large-k path) must be value-identical
-    to the literal-expression path: same clusters, same sq_dist doubles,
-    same (dist, idx) tie-break."""
-    from pyspark.sql import functions as F
-
-    from docling_service_spark.queries.ann import _assign, _assign_via_join
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
-    )
-    lit_rows = {r["vec_id"]: (r["cluster"], r["sq_dist"])
-                for r in _assign(emb, FROZEN_CENTROIDS).collect()}
-    join_rows = {r["vec_id"]: (r["cluster"], r["sq_dist"])
-                 for r in _assign_via_join(emb, FROZEN_CENTROIDS).collect()}
-    assert lit_rows == join_rows  # exact, including float bits
-
-
-def test_large_k_routing_matches_literal_path(spark, monkeypatch):
-    """Forcing the broadcast-join routing (as used above _MAX_EXPR_K) must
-    reproduce the literal-expression q45 result exactly."""
-    from docling_service_spark.queries import ann
-
-    lit_rows = sorted(tuple(r) for r in ann.q45_ivf_ann_topk(spark, SF_DIR).collect())
-    monkeypatch.setattr(ann, "_MAX_EXPR_K", 0)
-    join_rows = sorted(tuple(r) for r in ann.q45_ivf_ann_topk(spark, SF_DIR).collect())
-    assert lit_rows == join_rows
-
-
 def test_ann_rows_shape(spark):
     df = q45_ivf_ann_topk(spark, SF_DIR)
     rows = df.collect()
     assert len(rows) == N_QUERIES * TOP_K
     assert df.columns == ["probe_id", "neighbor_id", "rank", "sim_e6"]
-
-
-def test_flat_train_above_expr_k_warns_once_toward_two_level(spark, monkeypatch):
-    """r7 verdict #4: flat train_ivf past _MAX_EXPR_K is the measured
-    anti-path (sf1: 308.6 s flat vs 39.8 s two-level) — it must emit a
-    ONE-SHOT advisory naming train_ivf_2level, and stay silent at k within
-    the literal-expression envelope."""
-    import warnings as _warnings
-
-    from docling_service_spark.queries import ann
-
-    monkeypatch.setattr(ann, "_LARGE_K_WARNED", [False])
-    ann._CENTROID_CACHE.pop((SF_DIR, 129, 1), None)
-    ann._CENTROID_CACHE.pop((SF_DIR, 130, 1), None)
-    with _warnings.catch_warnings(record=True) as rec:
-        _warnings.simplefilter("always")
-        c = train_ivf(spark, SF_DIR, k=129, iters=1)
-        assert len(c) == 129
-        train_ivf(spark, SF_DIR, k=130, iters=1)  # second large-k train
-    hits = [w for w in rec if "train_ivf_2level" in str(w.message)]
-    assert len(hits) == 1  # advisory, not noise: fires once per process
-
-    monkeypatch.setattr(ann, "_LARGE_K_WARNED", [False])
-    ann._CENTROID_CACHE.pop((SF_DIR, 17, 1), None)
-    with _warnings.catch_warnings(record=True) as rec:
-        _warnings.simplefilter("always")
-        train_ivf(spark, SF_DIR, k=17, iters=1)  # inside the envelope
-    assert not [w for w in rec if "train_ivf_2level" in str(w.message)]

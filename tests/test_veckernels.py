@@ -1,25 +1,31 @@
-"""Round-9 optimization guard: the NumPy Arrow kernels (veckernels.py) must be
-BIT-FOR-BIT identical to the JVM expression paths they replaced — floor-scaled
-ints make any FP-order drift a value change, so every pinned pair compares
-exact tuples, no tolerance.
+"""The NumPy Arrow kernels (veckernels.py) must reproduce the DuckDB oracles
+BIT-FOR-BIT — floor-scaled ints make any FP-order drift a value change, so
+every comparison is exact, no tolerance.
 
-Runs at sf0.1 (2000 vectors — 4x the oracle mirror's sf0.01, more FP
-diversity) against the frozen quantizers the driver queries use.  q43's
+The kernel queries run at sf0.1 (2000 vectors — 4x the oracle mirror's
+sf0.01, more FP diversity) against their oracles.  NaN/inf edge cases check
+the kernels' ordering and sign rules against DuckDB itself.  q43's
 component-label helper is checked against a plain-Python union-find.
 """
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from docling_service_spark.queries import ann
+from docling_service_spark.queries import ORACLES, QUERIES, ann
 from docling_service_spark.queries import similarity as sim
 from docling_service_spark.queries.common import load
-from docling_service_spark.queries.ivf_centroids import FROZEN_CENTROIDS
-from docling_service_spark.queries.veckernels import component_min_labels, double_to_long
+from docling_service_spark.queries.veckernels import (
+    assign_argmin, component_min_labels, double_to_long, lsh_bucket_ids,
+    nearest_centroids)
+
+from tests.test_entry_contract import _canon_rows
 
 SF_DIR = "/root/testdata/sf0.1"
 
@@ -34,17 +40,31 @@ def _emb(spark):
     )
 
 
-def test_assign_arrow_matches_jvm(spark):
-    """Flat frozen-quantizer assignment: kernel vs literal-expression argmin,
-    including the floor-scaled distance (q44's full output)."""
-    emb = _emb(spark)
-    jvm = ann._assign(emb, FROZEN_CENTROIDS).select(
-        "vec_id",
-        F.col("cluster").cast("bigint").alias("cluster"),
-        F.floor(F.col("sq_dist") * 1_000_000).cast("bigint").alias("sq_dist_e6"),
-    )
-    arrow = ann._assign_arrow(emb, FROZEN_CENTROIDS, passthrough=False)
-    assert _rows(arrow) == _rows(jvm)
+def _oracle_rows(sf_dir, sql):
+    con = duckdb.connect()
+    try:
+        con.sql("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/embeddings.parquet')")
+        res = con.sql(sql)
+        return res.columns, res.fetchall()
+    finally:
+        con.close()
+
+
+def _assert_matches_oracle(spark, sf_dir, name):
+    sdf = QUERIES[name](spark, sf_dir)
+    o_cols, o_rows = _oracle_rows(sf_dir, ORACLES[name])
+    assert sorted(sdf.columns) == sorted(o_cols)
+    assert (_canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+            == _canon_rows(o_cols, o_rows))
+
+
+@pytest.mark.parametrize("name", [
+    "q40_cosine_topk", "q41_lsh_buckets", "q42_lsh_bucketed_neighbors",
+    "q44_ivf_assignments", "q45_ivf_ann_topk", "q46_ivf_cluster_pairs"])
+def test_kernel_query_matches_oracle_at_sf0_1(spark, name):
+    """The kernel queries against their DuckDB oracles at sf0.1."""
+    _assert_matches_oracle(spark, SF_DIR, name)
 
 
 def test_assign2_arrow_matches_dataframe_path(spark):
@@ -60,38 +80,111 @@ def test_assign2_arrow_matches_dataframe_path(spark):
     assert _rows(arrow) == _rows(jvm)
 
 
-def test_lsh_pairs_arrow_matches_jvm(spark):
-    """q42's bucket+normalize+pair kernel vs the JVM self-join fold."""
-    emb = load(spark, SF_DIR, "embeddings")
-    jvm = sim._lsh_bucketed_pairs_jvm(emb, n_planes=sim.N_PLANES)
-    arrow = sim.lsh_bucketed_pairs(emb, n_planes=sim.N_PLANES)
-    assert _rows(arrow) == _rows(jvm)
+# Centroids whose squared distances to the zero vector are [NaN, inf, 5, 5]:
+# NaN must sort above inf and the tie must go to the lower index.
+_EDGE_CENTROIDS = np.zeros((4, 4))
+_EDGE_CENTROIDS[0, 0] = np.nan
+_EDGE_CENTROIDS[1, 0] = np.inf
+_EDGE_CENTROIDS[2, :2] = [1.0, 2.0]
+_EDGE_CENTROIDS[3, :2] = [2.0, 1.0]
+_EDGE_VECTORS = np.array([
+    [0.0, 0.0, 0.0, 0.0],           # [NaN, inf, 5, 5]
+    [np.nan] * 4,                   # all NaN
+    [np.inf, 0.0, 0.0, 0.0],        # [NaN, NaN, inf, inf]
+    [1.0, 2.0, 0.0, 0.0],           # [NaN, inf, 0, 2]
+    [-np.inf, 1.0, 0.0, 0.0],       # [NaN, inf, inf, inf]
+])
 
 
-def test_q46_arrow_matches_jvm(spark):
-    """q46's cluster-pair kernel vs the JVM cluster self-join fold."""
-    arrow = ann.q46_ivf_cluster_pairs(spark, SF_DIR)
-    jvm = ann._q46_jvm(spark, SF_DIR)
-    assert _rows(arrow) == _rows(jvm)
+def _arrow_rows(key, col, M, value_type=pa.float64()):
+    """(key int64, col list<value_type>) rows of matrix ``M``.  Arrow keeps
+    NaN as a value; DuckDB's Python parameter binding would turn it into
+    NULL."""
+    return pa.table({key: pa.array(np.arange(len(M), dtype=np.int64)),
+                     col: pa.array([list(v) for v in M], pa.list_(value_type))})
 
 
-def test_cosine_score_kernel_matches_jvm_expr(spark):
-    """score_cosine_pairs vs the three-fold JVM cosine expression on the
-    q40 probe×candidate shape."""
-    emb = load(spark, SF_DIR, "embeddings")
-    probes = emb.filter(F.col("vec_id") < sim.N_PROBES).select(
-        F.col("vec_id").cast("bigint").alias("probe_id"),
-        F.col("embedding").alias("pe"))
-    cands = emb.select(F.col("vec_id").cast("bigint").alias("neighbor_id"),
-                       F.col("embedding").alias("ce"))
-    joined = cands.join(F.broadcast(probes))
-    jvm_sim = sim._dot(F.col("pe"), F.col("ce")) / (
-        F.sqrt(sim._dot(F.col("pe"), F.col("pe")))
-        * F.sqrt(sim._dot(F.col("ce"), F.col("ce"))))
-    jvm = joined.select("probe_id", "neighbor_id",
-                        F.floor(jvm_sim * 1000000).cast("bigint").alias("sim_e6"))
-    arrow = sim.score_cosine_pairs(joined)
-    assert _rows(arrow) == _rows(jvm)
+def _emb_table(X):
+    """An embeddings table (vec_id, float32 embedding, label) over ``X``."""
+    t = _arrow_rows("vec_id", "embedding", X, pa.float32())
+    return t.append_column("label", pa.array(np.arange(len(X), dtype=np.int32)))
+
+
+def _duck_dist_order():
+    """Per vector, centroid indices in DuckDB's (dist, idx) order, using the
+    oracles' sequential squared-distance fold and row order."""
+    con = duckdb.connect()
+    try:
+        con.register("x", _arrow_rows("i", "v", _EDGE_VECTORS))
+        con.register("c", _arrow_rows("c", "w", _EDGE_CENTROIDS))
+        rows = con.sql("""
+            SELECT i, list(c ORDER BY rn), min({'d': d, 'c': c}).c FROM (
+              SELECT i, c, d, ROW_NUMBER() OVER (PARTITION BY i ORDER BY d, c) AS rn
+              FROM (SELECT x.i, c.c,
+                           list_aggregate(list_transform(generate_series(1, 4),
+                             k -> (x.v[k] - c.w[k]) * (x.v[k] - c.w[k])), 'sum') AS d
+                    FROM x CROSS JOIN c))
+            GROUP BY i ORDER BY i""").fetchall()
+    finally:
+        con.close()
+    return [r[1] for r in rows], [r[2] for r in rows]
+
+
+def test_nearest_centroids_nan_inf_order_matches_duckdb():
+    """Routing and argmin order NaN distances above +inf and break ties on
+    the lower index, as DuckDB's ORDER BY (d, c) and min(struct) do."""
+    order, argmin = _duck_dist_order()
+    with np.errstate(invalid="ignore", over="ignore"):
+        idx, _ = nearest_centroids(_EDGE_VECTORS, _EDGE_CENTROIDS, 3)
+        cluster, _ = assign_argmin(_EDGE_VECTORS, _EDGE_CENTROIDS)
+    assert idx.tolist() == [o[:3] for o in order]
+    assert cluster.tolist() == argmin
+
+
+def test_lsh_bucket_ids_nan_inf_match_duckdb():
+    """A NaN projection sets its bit (NaN > 0 is true in Spark and DuckDB):
+    an all-NaN row lands in the last bucket, and an inf element times a zero
+    weight sets the bit too."""
+    X = np.zeros((3, sim.DIM))
+    X[0] = np.nan
+    X[1, 0] = np.inf
+    X[2, 0] = -np.inf
+    con = duckdb.connect()
+    try:
+        con.register("embeddings", _emb_table(X))
+        want = [r[0] for r in con.sql(
+            f"SELECT bucket FROM ({sim.ORACLE_Q41}) ORDER BY vec_id").fetchall()]
+    finally:
+        con.close()
+    W = np.array([[float(sim.hyperplane_weights(i, j)) for j in range(sim.N_PLANES)]
+                  for i in range(sim.DIM)])
+    with np.errstate(invalid="ignore"):
+        got = lsh_bucket_ids(X, W)
+    assert want[0] == (1 << sim.N_PLANES) - 1
+    assert got.tolist() == want
+
+
+def test_q41_adversarial_table_matches_oracle(spark, tmp_path):
+    """q41 over NaN, inf and zero vectors agrees with ORACLE_Q41."""
+    rng = np.random.default_rng(7)
+    X = rng.standard_normal((8, sim.DIM)).astype(np.float32)
+    X[0] = np.nan                 # all NaN
+    X[1, 5] = np.nan              # one NaN
+    X[2, 3] = np.inf              # one inf
+    X[3] = 0.0                    # zero vector
+    X[4, 0] = -np.inf
+    pq.write_table(_emb_table(X), tmp_path / "embeddings.parquet")
+    _assert_matches_oracle(spark, str(tmp_path), "q41_lsh_buckets")
+
+
+@pytest.mark.parametrize("name", sorted(n for n in QUERIES if "q40" <= n < "q48"))
+def test_kernel_query_plans_have_no_lambda_folds(spark, name):
+    """q40–q47 take their quantizer or hyperplanes as Python lists, so all
+    their embedding math runs in NumPy kernels: no Catalyst lambda fold may
+    remain in the optimized plan."""
+    df = QUERIES[name](spark, "/root/testdata/sf0.01")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan.lower()
 
 
 def test_double_to_long_jvm_semantics():
