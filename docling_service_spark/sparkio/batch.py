@@ -105,22 +105,20 @@ def _fold_bucket_sums(local: dict, bucket_arr: pa.Array, hash_arr: pa.Array) -> 
     Exact integer sums (Spark's decimal(38,0) twin): each int64 is split
     into arithmetic-shift high and unsigned low 32-bit halves, group-summed
     in int64 (no overflow below 2^31 rows/batch), and reassembled as Python
-    big ints — bit-for-bit the sums the post-write summarize scan computed,
-    now costing one vectorized pass inside the extraction batch instead of
-    a second Spark job over the written files."""
+    big ints — bit-for-bit checkpoint._bucket_summaries, at the cost of one
+    vectorized pass inside the extraction batch instead of a second Spark
+    job over the written files."""
     import numpy as np
 
     from ..hashing import xxh64_long_spark_np
 
     if bucket_arr.null_count or hash_arr.null_count:
-        # A null passthrough value would round-trip float→NaN→INT64_MIN in
-        # the astype below and silently corrupt the bucket fingerprints
-        # (advice r8).  Prepared inputs never carry null passthrough
-        # columns; if one ever does, SKIP this batch's bucket fold — the
-        # accumulator's bucket-count total then disagrees with the write's
-        # observe metrics and the caller routes the run to the exact
-        # post-write scan (checkpoint acc_ok cross-check).
-        return
+        # A null would round-trip float→NaN→INT64_MIN in the astype below
+        # and commit a wrong fingerprint; these sums are the only record of
+        # the bucket, so refuse the batch instead.
+        raise ValueError(
+            "null _bucket or _input_hash in the extraction input: "
+            "prepare_input's passthrough columns must be non-null")
     b = bucket_arr.to_numpy(zero_copy_only=False).astype(np.int64)
     h = hash_arr.to_numpy(zero_copy_only=False).astype(np.int64)
     uniq, inv = np.unique(b, return_inverse=True)
@@ -160,8 +158,8 @@ def make_extract_kernel(max_doc_bytes: int = MAX_DOC_BYTES, stats_acc=None):
     ``add`` per task at iterator end.  The write action is a single result
     stage (no Exchange before mapInArrow by design), so Spark applies each
     task's update exactly once — retried/failed attempts are discarded with
-    the task (the caller additionally cross-checks the totals against the
-    write's observe metrics before trusting them)."""
+    the task.  It is the run's only source of lineage rows, bucket
+    fingerprints and run_stats (checkpoint._process_and_commit)."""
 
     def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         try:

@@ -37,10 +37,9 @@ import json
 import os
 import time
 import uuid
-import warnings
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .batch import INSTRUMENTED_DDL
 from .pipeline import run_extraction, strip_instrumentation
@@ -62,13 +61,13 @@ def _write_lineage_rows(rows, out_dir: str) -> None:
     Lineage is metadata-sized — O(extraction partitions) rows per run, the
     same scale as a Delta/Iceberg manifest's per-file stats — so routing it
     through a Spark write job paid ~0.5 s of pure per-run fixed cost (task
-    scheduling + commit protocol for a handful of rows).  The aggregate
-    itself still runs as one Spark job (column-pruned scan of the run dir);
-    only the tiny result crosses to the driver, which already owns the
-    store root for manifest IO.  Crash-safety matches the manifest writes:
-    tmp file + os.replace, so readers never see a partial parquet file (a
-    crash before the replace loses metrics rows only — same contract as the
-    commit→lineage window documented at the call site).
+    scheduling + commit protocol for a handful of rows).  The rows come from
+    the extraction kernel's run-stats accumulator, so they are already on
+    the driver, which also owns the store root for manifest IO.
+    Crash-safety matches the manifest writes: tmp file + os.replace, so
+    readers never see a partial parquet file (a crash before the replace
+    loses metrics rows only — same contract as the commit→lineage window
+    documented at the call site).
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -375,8 +374,9 @@ class SnapshotStore:
         — WORK done across all runs (merges exclude carried rows, upserts
         re-book reprocessed docs), matching a sum over the lineage table.
         O(manifest) when the table has always carried ``lifetime_stats``
-        (every commit since the stats rode the extraction write's observe
-        metrics); legacy tables pay one lineage-table aggregate job."""
+        (each commit adds its run's ``run_stats``, the column sums of the
+        lineage rows the extraction kernel's accumulator booked); legacy
+        tables pay one lineage-table aggregate job."""
         m = self.current_manifest()
         ls = (m or {}).get("lifetime_stats")
         if ls is not None:
@@ -823,13 +823,6 @@ class _RunStatsParam:
         return a
 
 
-# Kill-switch for the in-write stats accumulator (tests force the fallback
-# path through here; operationally always on — the observe cross-check
-# below already degrades to the scan on any mismatch).
-_USE_STATS_ACC = True
-_ACC_MISMATCH_WARNED = False
-
-
 def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
                         num_partitions, allow_overwrite, n_buckets,
                         max_doc_bytes=None, extra_bucket_sums=None,
@@ -842,138 +835,39 @@ def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
     # remainder (scan + write + codec).
     timings: dict[str, int] = {}
     t0 = time.perf_counter()
-    # Run stats (per-partition lineage counters + per-bucket content
-    # fingerprints) fold into the write itself via an accumulator the
-    # kernel bumps once per task (make_extract_kernel) — at scale the
-    # alternative is a second pass over the files just written, which at
-    # 100 TB is a second scan of the run's entire output.  Exactly-once:
-    # the write is a single result stage, and the totals are additionally
-    # cross-checked against the observe metrics below before being trusted
-    # (any mismatch falls back to the exact post-write scan).
-    stats_acc = (spark.sparkContext.accumulator({}, _RunStatsParam())
-                 if _USE_STATS_ACC else None)
+    # Run stats are the one channel the kernel folds into the write itself
+    # (make_extract_kernel): per-partition lineage counters and per-bucket
+    # content fingerprints, one accumulator add per task.  The write is a
+    # single result stage, so Spark applies each task's update exactly once.
+    # Carried merge rows never pass the kernel, so the accumulator books only
+    # this run's real work — re-booking carried rows on every merge would
+    # inflate lineage totals without bound in a streaming deployment.
+    stats_acc = spark.sparkContext.accumulator({}, _RunStatsParam())
     out = run_extraction(prepared, num_partitions=num_partitions,
                          max_doc_bytes=max_doc_bytes, stats_acc=stats_acc)
-    fresh = F.lit(True)
     if carry_rows is not None:
         # Doc-level merge: committed rows of the dirty buckets that the
         # input did NOT replace are carried into the new run dir verbatim
         # (their instrumentation columns included), so remapping the bucket
-        # keeps them live without re-extracting.  The flag column marks
-        # which side each row came from so the run-stat observation can
-        # book only this run's real work (carried rows' extraction was
-        # booked by the run that produced them); it is dropped again below
-        # the observe node, so the written schema is unchanged.
-        out = (out.withColumn("_fresh", F.lit(True))
-               .unionByName(carry_rows.withColumn("_fresh", F.lit(False))))
-        fresh = F.col("_fresh")
-
-    # Whole-run stat metrics ride the WRITE action as df.observe metrics —
-    # CollectMetrics is a narrow node (the zero-Exchange-before-mapInArrow
-    # plan survives) and launches NO extra job.  They are restricted to
-    # this run's REAL work via the carried-flag conditional, so every path
-    # (fresh table, incremental, merge) books lifetime totals at commit,
-    # and they double as the independent cross-check for the accumulator's
-    # kernel-side stats (computed by different machinery on the same rows).
-    # The per-bucket observe PIVOT that used to sit here (r5..r7) was
-    # retired in round 8: its conditional aggregates cost per-ROW time
-    # (measured, BENCH/OBSERVE_SWEEP.md) while the accumulator folds the
-    # same fingerprints into the kernel's existing columnar pass.
-    obs = Observation(f"run-stats-{run_id}")
-    obs_exprs = [
-        F.count(F.lit(1)).alias("_total"),
-        F.sum(F.when(fresh, F.col("_wall_ms"))).alias("_wall_ms_total"),
-        F.count(F.when(fresh, 1)).alias("_fresh_total"),
-        F.count(F.when(fresh & (F.col("status") == "failed"), 1)).alias("_failed"),
-        F.count(F.when(fresh & (F.col("status") == "rejected"), 1)).alias("_rejected"),
-    ]
-    out = out.observe(obs, *obs_exprs)
-    if carry_rows is not None:
-        out = out.drop("_fresh")  # projection sits ABOVE the observe node
+        # keeps them live without re-extracting.
+        out = out.unionByName(carry_rows)
 
     data_dir = os.path.join(root, "data", f"run={run_id}")
     out.write.parquet(data_dir, mode="overwrite")
     timings["extract_and_write_ms"] = int((time.perf_counter() - t0) * 1000)
 
     t0 = time.perf_counter()
-    written = spark.read.schema(INSTRUMENTED_DDL).parquet(data_dir)
-    m = obs.get
-
-    # Primary path: the kernel-side accumulator already holds both
-    # post-write aggregates — per-partition lineage stats (fresh work only
-    # by construction: carried merge rows never pass the kernel) and
-    # per-bucket content fingerprints.  Trust it only after its totals
-    # reconcile with the observe metrics computed by independent machinery
-    # on the same action (guards codepath bugs and any exotic retry
-    # semantics).  Merge runs still need one _bucket_summaries scan: bucket
-    # fingerprints cover ALL live rows, carried included.
-    lineage_stats = None  # [(pid, (docs, bytes, failures, rejects, wall))]
-    bucket_sums = None
-    if stats_acc is not None:
-        acc = stats_acc.value
-        p_stats = {int(k[1]): v for k, v in acc.items() if k[0] == "p"}
-        b_stats = {int(k[1]): v for k, v in acc.items() if k[0] == "b"}
-        acc_ok = (
-            sum(v[0] for v in p_stats.values()) == int(m["_fresh_total"])
-            and sum(v[2] for v in p_stats.values()) == int(m["_failed"])
-            and sum(v[3] for v in p_stats.values()) == int(m["_rejected"])
-            and sum(v[4] for v in p_stats.values()) == int(m["_wall_ms_total"] or 0)
-            and sum(v[0] for v in b_stats.values()) == int(m["_fresh_total"])
-        )
-        if acc_ok:
-            lineage_stats = sorted(p_stats.items())
-            if carry_rows is None:
-                bucket_sums = {str(b): [int(v[0]), str(v[1]), str(v[2])]
-                               for b, v in b_stats.items()}
-            else:
-                bucket_sums = _bucket_summaries(written)
-        else:  # pragma: no cover - exercised via _USE_STATS_ACC in tests
-            global _ACC_MISMATCH_WARNED
-            if not _ACC_MISMATCH_WARNED:
-                _ACC_MISMATCH_WARNED = True
-                warnings.warn(
-                    "run-stats accumulator disagreed with observe metrics; "
-                    "falling back to the post-write scan for this run",
-                    RuntimeWarning, stacklevel=2)
-
-    if lineage_stats is None:
-        # Fallback: ONE fused metadata job over the just-written run dir —
-        #   grouping (_pid)    -> per-partition lineage rows (fresh only)
-        #   grouping (_bucket) -> per-bucket fingerprints (all live rows)
-        # O(partitions + buckets) rows collected driver-side.
-        if carry_rows is not None:
-            agg_src = written.join(
-                carry_rows.select("doc_id").withColumn("_carried", F.lit(True)),
-                "doc_id", "left")
-            fresh_row = F.col("_carried").isNull()
-        else:
-            agg_src = written
-            fresh_row = F.lit(True)
-        fused_rows = agg_src.groupingSets([["_pid"], ["_bucket"]], "_pid", "_bucket").agg(
-            F.count(F.when(fresh_row, 1)).alias("doc_count"),
-            F.sum(F.when(fresh_row, F.col("_bytes"))).alias("bytes"),
-            F.count(F.when(fresh_row & (F.col("status") == "failed"), 1)).alias("parse_failures"),
-            F.count(F.when(fresh_row & (F.col("status") == "rejected"), 1)).alias("rejected"),
-            F.sum(F.when(fresh_row, F.col("_wall_ms"))).alias("wall_ms"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("_input_hash").cast("decimal(38,0)")).alias("s"),
-            F.sum(F.xxhash64(F.col("_input_hash")).cast("decimal(38,0)")).alias("s2"),
-        ).collect()
-        # Partitions whose every row was carried booked their work in the
-        # run that produced them: doc_count 0 -> no lineage row (same rows
-        # the old anti-join produced).
-        lineage_stats = [
-            (int(r["_pid"]), (int(r["doc_count"]), int(r["bytes"] or 0),
-                              int(r["parse_failures"]), int(r["rejected"]),
-                              int(r["wall_ms"] or 0)))
-            for r in fused_rows if r["_pid"] is not None and r["doc_count"]]
-        # ``or 0``: a bucket whose _input_hash is all-null (n > 0) must
-        # store "0", not the literal string "None" (advice r8 — the old
-        # observe path guarded the same way).
-        bucket_sums = {str(r["_bucket"]): [int(r["n"]), str(r["s"] or 0),
-                                           str(r["s2"] or 0)]
-                       for r in fused_rows
-                       if r["_bucket"] is not None and r["n"]}
+    acc = stats_acc.value
+    # [(pid, (docs, bytes, failures, rejects, wall_ms))]
+    lineage_stats = sorted((int(k[1]), v) for k, v in acc.items() if k[0] == "p")
+    if carry_rows is None:
+        bucket_sums = {str(k[1]): [int(v[0]), str(v[1]), str(v[2])]
+                       for k, v in acc.items() if k[0] == "b"}
+    else:
+        # A merge bucket's fingerprint covers its carried rows too, which
+        # the kernel never saw: one column-pruned scan of the run dir.
+        bucket_sums = _bucket_summaries(
+            spark.read.schema(INSTRUMENTED_DDL).parquet(data_dir))
     for b in buckets:  # a wholesale-deleted bucket has zero rows: record it
         bucket_sums.setdefault(str(b), list(_EMPTY_SUM))
     docs = sum(v[0] for v in bucket_sums.values())
@@ -984,6 +878,10 @@ def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
         # data on EVERY upsert, forever.  Merged first: the dirty buckets'
         # fresh sums must win.
         bucket_sums = {**extra_bucket_sums, **bucket_sums}
+    # run_stats are the lineage rows' column sums: the same quantities the
+    # lineage table books for this run.
+    run_stats = dict(zip(SnapshotStore.LIFETIME_KEYS,
+                         (sum(v[i] for _, v in lineage_stats) for i in (0, 2, 3, 4))))
     timings["summarize_ms"] = int((time.perf_counter() - t0) * 1000)
     t0 = time.perf_counter()
 
@@ -993,24 +891,15 @@ def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
     # the lineage table stamped with a stale snapshot.  A crash between
     # commit and the lineage write only loses metrics rows (read_lineage
     # skips missing run dirs), never data.
-    run_stats = {
-        "docs": int(m["_fresh_total"]),
-        "parse_failures": int(m["_failed"]),
-        "rejected": int(m["_rejected"]),
-        "wall_ms": int(m["_wall_ms_total"] or 0),
-    }
     snapshot_id = store.commit(buckets, run_id, allow_overwrite=allow_overwrite,
                                n_buckets=n_buckets, bucket_sums=bucket_sums,
                                expected_parent_snapshot_id=expected_parent,
                                run_stats=run_stats)
     timings["commit_ms"] = int((time.perf_counter() - t0) * 1000)
 
-    # Lineage rows come from the in-write accumulator (or the fused
-    # fallback job) — carried merge rows excluded in both: re-booking them
-    # on every merge would inflate lineage totals without bound in a
-    # streaming deployment.  Stamp them with the snapshot id the commit
-    # actually produced and write driver-side (metadata-sized, no Spark
-    # job — see _write_lineage_rows).
+    # Stamp the accumulator's lineage rows with the snapshot id the commit
+    # actually produced and write them driver-side (metadata-sized, no
+    # Spark job — see _write_lineage_rows).
     t0 = time.perf_counter()
     _write_lineage_rows(
         [{"run_id": run_id, "snapshot_id": int(snapshot_id),
@@ -1198,14 +1087,16 @@ def run_merge_upsert(
             changed = prepared
             own_changed = False
         try:
-            dirty_buckets = sorted(r["_bucket"] for r in
-                                   changed.select("_bucket").distinct().collect())
+            # One job gives both the dirty buckets and the changed-doc count.
+            per_bucket = {r["_bucket"]: r["count"] for r in
+                          changed.groupBy("_bucket").count().collect()}
+            dirty_buckets = sorted(per_bucket)
             if not dirty_buckets:
                 summary = {"run_id": run_id, "snapshot_id": None, "buckets": [],
                            "docs": 0, "docs_changed": 0}
                 notify_completion(on_complete, {**summary, "status": "noop", "detail": None})
                 return _finish(summary)
-            n_changed = changed.count()
+            n_changed = sum(per_bucket.values())
             dirty_committed = [b for b in dirty_buckets if str(b) in committed]
             carry = None
             if dirty_committed:

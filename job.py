@@ -222,7 +222,7 @@ def main(argv=None) -> int:
 
     store = SnapshotStore(args.output)
     # Work totals come from the manifest's lifetime_stats (accumulated at
-    # commit time from each run's observe metrics, carried rows excluded) —
+    # commit time from each run's run_stats, carried rows excluded) —
     # zero jobs on ANY path (fresh, incremental, merge); only tables with
     # commits predating lifetime_stats pay the lineage aggregate fallback.
     totals = store.lifetime_totals(spark)

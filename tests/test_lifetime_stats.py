@@ -1,19 +1,29 @@
-"""Manifest ``lifetime_stats``: whole-table work totals accumulate at commit
-time from the extraction write's observe metrics — merge runs book only their
-real work via the carried-flag conditional — so run reporting reads O(manifest)
-and launches ZERO Spark jobs, on every path (fresh, incremental, merge),
-instead of aggregating the lineage table per run (r6 verdict next-round #5)."""
+"""Run statistics: the extraction kernel's accumulator is the one source of a
+run's lineage rows, its fresh bucket fingerprints and its ``run_stats`` (the
+lineage column sums).  Manifest ``lifetime_stats`` accumulate those at commit
+time — merge runs book only their real work, since carried rows never pass
+the kernel — so run reporting reads O(manifest) and launches ZERO Spark jobs,
+on every path (fresh, incremental, merge), instead of aggregating the lineage
+table per run (r6 verdict next-round #5).  The accumulator's folds are pinned
+against independent Spark aggregates over the written run dir."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from docling_service_spark.corpus import corpus_df, make_corpus
 from docling_service_spark.schemas import INPUT_SCHEMA
 from docling_service_spark.sparkio import checkpoint as cp
+from docling_service_spark.sparkio.batch import (
+    INSTRUMENTED_DDL,
+    _fold_bucket_sums,
+    _span_bytes,
+)
 from docling_service_spark.sparkio.checkpoint import (
     SnapshotStore,
     compact,
@@ -21,6 +31,7 @@ from docling_service_spark.sparkio.checkpoint import (
     run_merge_upsert,
     run_upsert,
 )
+from docling_service_spark.sparkio.pipeline import derive_lineage
 
 N_DOCS = 60
 N_BUCKETS = 8
@@ -140,61 +151,79 @@ def test_legacy_manifest_falls_back_and_never_restarts_midstream(spark, tmp_path
     assert store.lifetime_totals(spark)["docs"] == N_DOCS + 1
 
 
-def test_stats_acc_disabled_falls_back_to_summary_scan(spark, tmp_path, monkeypatch):
-    """With the in-write run-stats accumulator disabled (the same degrade
-    the observe cross-check applies on any mismatch), bucket summaries and
-    lineage must come out identical via the fused post-write scan, and
-    no-op upsert detection must keep working from them."""
-    monkeypatch.setattr(cp, "_USE_STATS_ACC", False)
+def _lineage_rows(rows) -> list[tuple]:
+    return sorted((r["run_id"], r["snapshot_id"], r["partition_id"], r["doc_count"],
+                   r["bytes"], r["parse_failures"], r["rejected"], r["wall_ms"])
+                  for r in rows)
+
+
+def _column_sums(lineage: list[tuple]) -> dict:
+    return {k: sum(r[i] for r in lineage)
+            for k, i in zip(SnapshotStore.LIFETIME_KEYS, (3, 5, 6, 7))}
+
+
+def _run_dir(spark, root, run_id):
+    return spark.read.schema(INSTRUMENTED_DDL).parquet(
+        os.path.join(root, "data", f"run={run_id}"))
+
+
+def test_run_stats_match_spark_aggregates_of_the_same_run(spark, tmp_path):
+    """Lineage rows, bucket fingerprints and run_stats all come from the
+    kernel accumulator; each must equal an independent Spark aggregate over
+    the rows that run wrote — the decimal hash sums included (the
+    accumulator reimplements Spark's xxhash64-of-long + decimal(38,0) sums
+    in numpy/python), and wall_ms exactly, since both read the same run."""
     root = str(tmp_path / "table")
-    inp = corpus_df(spark, N_DOCS, partitions=4)
-    run_incremental(spark, inp, root, n_buckets=N_BUCKETS,
-                    num_partitions=4, run_id="a")
+    docs = make_corpus(N_DOCS)
+    docs[1] = {**docs[1], "spans": None}                  # a parse failure
+    cap = max(_span_bytes(d["spans"]) for d in docs) - 1  # the largest doc is rejected
+    s = run_incremental(spark, spark.createDataFrame(docs, INPUT_SCHEMA), root,
+                        n_buckets=N_BUCKETS, num_partitions=4, run_id="r",
+                        max_doc_bytes=cap)
     store = SnapshotStore(root)
-    m = store.current_manifest()
-    assert sorted(m["bucket_sums"]) == [str(b) for b in sorted(range(N_BUCKETS))]
-    exact = cp._bucket_summaries(
-        store.read_output(spark, instrumented=True)
-        .select("_bucket", "_input_hash"))
-    assert m["bucket_sums"] == exact
-    # Run-stat metrics still rode the observation.
-    assert m["lifetime_stats"]["docs"] == N_DOCS
-    # Summary-based no-op detection unaffected by the fallback path.
-    r = run_upsert(spark, inp, root, n_buckets=N_BUCKETS, run_id="noop")
-    assert r["snapshot_id"] is None and r["buckets"] == []
+    written = _run_dir(spark, root, "r")
+
+    lineage = _lineage_rows(store.read_lineage(spark).collect())
+    assert lineage == _lineage_rows(
+        derive_lineage(written, "r", s["snapshot_id"]).collect())
+    expected_sums = {str(b): list(cp._EMPTY_SUM) for b in range(N_BUCKETS)}
+    expected_sums.update(cp._bucket_summaries(written))
+    assert store.current_manifest()["bucket_sums"] == expected_sums
+    assert s["run_stats"] == _column_sums(lineage)
+    assert s["run_stats"]["parse_failures"] >= 1 and s["run_stats"]["rejected"] >= 1
+    assert s["run_stats"]["docs"] == N_DOCS
+
+    # Merge run: lineage books only the changed docs, whose written rows are
+    # exactly the ones that passed the kernel.
+    changed = [{"doc_id": d["doc_id"],
+                "spans": [{"kind": "text_block", "text": f"rev2 {i}",
+                           "media_ref": "1,72,100,400,16,TOPLEFT,text",
+                           "offset": 0}]}
+               for i, d in enumerate(docs[2:5])]
+    changed.append({"doc_id": "new-0000", "spans": None})
+    m = run_merge_upsert(spark, spark.createDataFrame(changed, INPUT_SCHEMA), root,
+                         n_buckets=N_BUCKETS, num_partitions=2, run_id="m")
+    written = _run_dir(spark, root, "m")
+    ids = [d["doc_id"] for d in changed]
+    merge_lineage = _lineage_rows(
+        store.read_lineage(spark).filter(F.col("run_id") == "m").collect())
+    assert merge_lineage == _lineage_rows(derive_lineage(
+        written.filter(F.col("doc_id").isin(ids)), "m", m["snapshot_id"]).collect())
+    assert m["run_stats"] == _column_sums(merge_lineage)
+    assert m["run_stats"]["docs"] == len(changed) and m["run_stats"]["parse_failures"] == 1
+    sums = store.current_manifest()["bucket_sums"]
+    assert {b: sums[str(b)] for b in m["buckets"]} == {
+        int(b): v for b, v in cp._bucket_summaries(written).items()}
 
 
-def test_stats_acc_matches_scan_bit_for_bit(spark, tmp_path, monkeypatch):
-    """The kernel-side accumulator (primary) and the fused post-write scan
-    (fallback) must produce IDENTICAL bucket fingerprints and lineage rows —
-    the decimal hash sums included (the accumulator reimplements Spark's
-    xxhash64-of-long + decimal(38,0) sums in numpy/python).  wall_ms is the
-    one kernel-MEASURED field, so it cannot be bit-identical across the two
-    physical runs this test needs — it is compared for presence only here;
-    within a single run the observe cross-check in _process_and_commit
-    already pins acc-wall == column-wall exactly (a mismatch would have
-    forced the scan path and tripped the RuntimeWarning)."""
-    inp = corpus_df(spark, N_DOCS, partitions=4)
-
-    def run(root, use_acc):
-        monkeypatch.setattr(cp, "_USE_STATS_ACC", use_acc)
-        run_incremental(spark, inp, root, n_buckets=N_BUCKETS,
-                        num_partitions=4, run_id="r")
-        store = SnapshotStore(root)
-        lin = sorted(
-            (r["partition_id"], r["doc_count"], r["bytes"],
-             r["parse_failures"], r["rejected"], r["wall_ms"] >= 0)
-            for r in store.read_lineage(spark).collect())
-        return store.current_manifest(), lin
-
-    m_acc, lin_acc = run(str(tmp_path / "acc"), True)
-    m_scan, lin_scan = run(str(tmp_path / "scan"), False)
-    assert m_acc["bucket_sums"] == m_scan["bucket_sums"]
-    lt_acc, lt_scan = m_acc["lifetime_stats"], m_scan["lifetime_stats"]
-    assert {k: v for k, v in lt_acc.items() if k != "wall_ms"} \
-        == {k: v for k, v in lt_scan.items() if k != "wall_ms"}
-    assert lt_acc["wall_ms"] > 0 and lt_scan["wall_ms"] > 0
-    assert lin_acc == lin_scan and len(lin_acc) > 0
+@pytest.mark.parametrize("null_col", ["_bucket", "_input_hash"])
+def test_fold_bucket_sums_refuses_null_passthrough(null_col):
+    """A skipped or NaN-mangled fold would commit a wrong fingerprint, and
+    no second channel would notice: a null passthrough value must raise."""
+    bucket = pa.array([1, None if null_col == "_bucket" else 2], pa.int32())
+    hashes = pa.array([5, None if null_col == "_input_hash" else 6], pa.int64())
+    with pytest.raises(ValueError, match="prepare_input"):
+        _fold_bucket_sums({}, bucket, hashes)
 
 
 def test_bucket_wholesale_upsert_rebooks_reprocessed_work(spark, tmp_path):
