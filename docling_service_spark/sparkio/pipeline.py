@@ -14,7 +14,7 @@ Physical-plan choices (SURVEY.md §4):
   bytes uniformly; the explicit salted repartition
   (``xxhash64(doc_id, salt) % P``) is kept for inputs whose *layout* is
   pathological — e.g. clustered by a hot key with row-group boundaries that
-  prevent splitting.  It is opt-in (``repartition=True``) because it pays the
+  prevent splitting.  It is opt-in (``num_partitions=P``) because it pays the
   row-codec toll.  AQE cannot rebalance a Python-UDF stage either way.
 - **Straggler amortization without a shuffle**: generate/scan with several
   partitions per core; the oversized-doc tail then costs one late batch, not
@@ -36,12 +36,6 @@ from .batch import (INSTRUMENTATION_COLS, INSTRUMENTED_DDL, MAX_DOC_BYTES,
 SALT = 0x5EED  # fixed salt: decorrelates the partition key from other uses of xxhash64(doc_id)
 
 
-def default_partitions(spark) -> int:
-    """4× parallelism: enough granularity for straggler amortization."""
-    return max(int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-               spark.sparkContext.defaultParallelism * 4)
-
-
 def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     # Repartition on the RAW 64-bit hash: Spark re-hashes the key expression
     # with murmur3 before modding, so pre-modding to P values would make the
@@ -51,24 +45,22 @@ def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def run_extraction(input_df: DataFrame, *, num_partitions: Optional[int] = None,
-                   repartition: Optional[bool] = None,
                    max_doc_bytes: Optional[int] = None,
                    stats_acc=None) -> DataFrame:
     """Raw corpus → instrumented extraction output (lazy; no action taken).
 
     No shuffle by default: trust the scan/generator partitioning — the
     vectorized Arrow path feeds Python directly, no row-codec round trip.
-    Passing ``num_partitions`` (or ``repartition=True``) forces the salted
-    shuffle first — for skewed/clustered inputs.  ``max_doc_bytes`` overrides
+    Passing ``num_partitions`` forces the salted shuffle to that many
+    partitions first — for skewed/clustered inputs.  ``max_doc_bytes`` overrides
     the oversized-doc reject cap (batch.MAX_DOC_BYTES, the reference's
     25 MiB upload limit).  ``stats_acc`` (optional accumulator) makes the
     kernel fold per-partition/per-bucket run stats into the write action
     itself — see make_extract_kernel.
     """
     df = input_df
-    if repartition or (repartition is None and num_partitions is not None):
-        p = num_partitions or default_partitions(input_df.sparkSession)
-        df = salted_repartition(df, p)
+    if num_partitions is not None:
+        df = salted_repartition(df, num_partitions)
     if max_doc_bytes is None and stats_acc is None:
         kernel = extract_batches
     else:

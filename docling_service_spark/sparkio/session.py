@@ -59,33 +59,36 @@ def get_spark(
     )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # Parquet row-group size for OUR writes (r9, guide §2.5/§6): documents
-    # are atomic multi-100-KB rows, and the default 128 MB row group makes a
-    # 130 MB corpus file ONE row group — unsplittable, so a clustered-giant
-    # file becomes a single straggler task no matter the split size
-    # (measured: the sf1 skew table wrote 15000 rows/1 row group per file;
-    # the direct scan ran 62% of the work in one task).  ~4 MB groups keep
-    # every file splittable at a granularity where bytes ∝ extraction work,
-    # which is what lets size-based splitting defuse clustered giants
-    # WITHOUT the salted shuffle.  Env-overridable for deployments.
-    builder = builder.config(
-        "spark.hadoop.parquet.block.size",
-        os.environ.get("SPARK_GRAFT_PARQUET_BLOCK_BYTES", str(4 * 1024 * 1024)))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # Scan-split granularity, set POST-create only when still at Spark's
-    # stock 128 MB: builder.config would override a spark-submit --conf
-    # (measured — an explicit 16m pin from scaling_bench.py would silently
-    # become this default), so an already-pinned value always wins.  4 MB
-    # splits match the row-group size above: a multi-row-group file spreads
-    # across tasks in proportion to bytes, and bytes track extraction work.
-    # Local default; cluster deployments scanning ordinary relational
-    # tables should override (see OPTIMIZATION_r09.md — at PB scale coarse
-    # splits cut scheduling overhead; the fine default exists for the
-    # giant-atomic-row corpus shape this engine ingests).
+    # Layout settings are applied POST-create and only where nothing has
+    # pinned them yet: builder.config would override a spark-submit --conf
+    # (measured — an explicit 16m split pin from scaling_bench.py silently
+    # became this default), so a --conf or extra_conf value always wins.
     conf = getattr(spark, "conf", None)  # absent on test fakes
-    if conf is not None and conf.get("spark.sql.files.maxPartitionBytes") == "134217728b":
-        conf.set("spark.sql.files.maxPartitionBytes",
-                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
+    if conf is not None:
+        # Parquet row-group size for OUR writes (r9, guide §2.5/§6):
+        # documents are atomic multi-100-KB rows, and the default 128 MB row
+        # group makes a 130 MB corpus file ONE row group — unsplittable, so a
+        # clustered-giant file becomes a single straggler task no matter the
+        # split size (measured: the sf1 skew table wrote 15000 rows/1 row
+        # group per file; the direct scan ran 62% of the work in one task).
+        # ~4 MB groups keep every file splittable at a granularity where
+        # bytes ∝ extraction work, which is what lets size-based splitting
+        # defuse clustered giants WITHOUT the salted shuffle.  Session conf
+        # entries reach the write's Hadoop conf.
+        if not any(conf.get(k, None) for k in
+                   ("spark.hadoop.parquet.block.size", "parquet.block.size")):
+            conf.set("parquet.block.size", str(4 * 1024 * 1024))
+        # Scan-split granularity, only when still at Spark's stock 128 MB.
+        # 4 MB splits match the row-group size above: a multi-row-group file
+        # spreads across tasks in proportion to bytes, and bytes track
+        # extraction work.  Local default; cluster deployments scanning
+        # ordinary relational tables should pin their own (see
+        # OPTIMIZATION_r09.md — at PB scale coarse splits cut scheduling
+        # overhead; the fine default exists for the giant-atomic-row corpus
+        # shape this engine ingests).
+        if conf.get("spark.sql.files.maxPartitionBytes") == "134217728b":
+            conf.set("spark.sql.files.maxPartitionBytes", "4m")
     return spark

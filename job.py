@@ -30,10 +30,8 @@ def upload_run_markdown(spark, output: str, store_path: str, summary: dict,
     (bucket dirs under ``data/run={id}``); uploads are doc-addressed
     last-writer-wins, so re-runs and upserts stay correct.
 
-    Gate on buckets, not snapshot_id: a metadata-only commit (pre-s2 summary
-    migration) advances the snapshot WITHOUT writing a run dir.  Merge-mode
-    NO-OP runs (snapshot_id None: the batch already merged) still upload —
-    crash-window recovery mirroring the streaming twin
+    Merge-mode NO-OP runs (snapshot_id None: the batch already merged)
+    still upload — crash-window recovery mirroring the streaming twin
     (sparkio/streaming.py:99-132): a re-run after a crash between the merge
     commit and the upload merges as a zero-changed no-op, but the batch's
     docs ARE live in the committed snapshot, so they upload from there
@@ -113,20 +111,15 @@ def main(argv=None) -> int:
                          "markdown/{doc_id}/{filename} at this store path "
                          "(reference app/main.py:855-868)")
     ap.add_argument("--compact", action="store_true",
-                    help="after the run, rewrite live buckets into one run dir "
-                         "when they scatter across more than --compact-max-runs "
-                         "dirs (long-lived merge/upsert tables fragment; "
-                         "Iceberg rewrite_data_files analog)")
+                    help="after the run, when live buckets scatter across more "
+                         "than --compact-max-runs run dirs, keep the largest "
+                         "runs and merge the rest into one dir so the table "
+                         "lands at --compact-max-runs dirs (long-lived "
+                         "merge/upsert tables fragment; Iceberg "
+                         "rewrite_data_files binpack analog)")
     ap.add_argument("--compact-max-runs", type=int, default=4,
                     help="fragmentation budget for --compact: live run-dir "
                          "count that triggers a rewrite (default 4)")
-    ap.add_argument("--compact-scope", choices=["table", "smallest"],
-                    default="smallest",
-                    help="'smallest' (default) merges only the small "
-                         "fragmented runs so the table lands at "
-                         "--compact-max-runs dirs (binpack — O(tail) "
-                         "rewrite); 'table' rewrites everything into one "
-                         "dir (O(table))")
     ap.add_argument("--compact-lineage-max-runs", type=int, default=32,
                     metavar="N",
                     help="with --compact: also fold the lineage table's "
@@ -222,15 +215,9 @@ def main(argv=None) -> int:
 
     store = SnapshotStore(args.output)
     # Work totals come from the manifest's lifetime_stats (accumulated at
-    # commit time from each run's run_stats, carried rows excluded) —
-    # zero jobs on ANY path (fresh, incremental, merge); only tables with
-    # commits predating lifetime_stats pay the lineage aggregate fallback.
-    totals = store.lifetime_totals(spark)
-    stats = (totals["docs"], totals["parse_failures"],
-             totals["rejected"], totals["wall_ms"])
-    # Live table size from manifest bucket summaries (O(manifest)); legacy
-    # tables without summaries pay one column-pruned scan.
-    live = store.live_doc_count()
+    # commit time from each run's run_stats, carried rows excluded) and the
+    # live table size from its bucket summaries — zero jobs on ANY path.
+    totals = store.lifetime_totals()
     report = {
         "run_id": summary["run_id"],
         "snapshot_id": summary["snapshot_id"],
@@ -238,15 +225,15 @@ def main(argv=None) -> int:
         "docs_this_run": summary["docs"],
         # lineage totals record WORK done across all runs (upserts reprocess);
         # docs_in_snapshot is the live table size.
-        "docs_processed_all_runs": int(stats[0] or 0),
-        "docs_in_snapshot": live if live is not None else store.read_output(spark).count(),
-        "parse_failures_total": int(stats[1] or 0),
-        "rejected_total": int(stats[2] or 0),
+        "docs_processed_all_runs": totals["docs"],
+        "docs_in_snapshot": store.live_doc_count(),
+        "parse_failures_total": totals["parse_failures"],
+        "rejected_total": totals["rejected"],
         # Per-stage walls: extract_wall_ms_total is the lineage-summed pure-
         # Python extraction time across partitions; stage_timings_ms splits
         # this run's driver wall into fused extract+write / summarize /
         # commit / lineage segments (100x plan-audit support).
-        "extract_wall_ms_total": int(stats[3] or 0),
+        "extract_wall_ms_total": totals["wall_ms"],
         # input_ms = source listing + schema resolution (or synth plan),
         # timed so run_wall_sec fully partitions into named segments — the
         # scaling study's fixed-cost leg can then be audited per component.
@@ -271,7 +258,7 @@ def main(argv=None) -> int:
         # conflict and keep going.
         try:
             c = compact(spark, args.output, max_live_runs=args.compact_max_runs,
-                        scope=args.compact_scope, on_complete=on_complete)
+                        on_complete=on_complete)
             report["compact"] = {k: c[k] for k in
                                  ("snapshot_id", "runs_before", "runs_after")}
             cl = compact_lineage(spark, args.output,

@@ -1,11 +1,20 @@
-"""Snapshot store: atomic commit, monotonic ids, idempotent resume."""
+"""Snapshot store: atomic commit, monotonic ids, idempotent resume, one
+manifest format."""
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
+
 from docling_service_spark.corpus import corpus_df
-from docling_service_spark.sparkio.checkpoint import SnapshotStore, run_incremental
+from docling_service_spark.sparkio.checkpoint import (
+    SnapshotStore,
+    compact,
+    run_incremental,
+    run_upsert,
+)
 
 N_DOCS = 90
 N_BUCKETS = 8
@@ -169,8 +178,8 @@ def test_vacuum_expires_old_manifests(tmp_path):
 
 
 def test_vacuum_after_metadata_only_commits_keeps_data_live(spark, tmp_path):
-    """Metadata-only commits (empty new_buckets — the summary-migration /
-    no-data-change path) carry the parent's bucket map forward, so even an
+    """Metadata-only commits (empty new_buckets — the lineage-compaction
+    path) carry the parent's bucket map forward, so even an
     aggressive vacuum that expires every DATA-BEARING manifest must keep the
     run dirs those metadata-only manifests still reference."""
     from docling_service_spark.sparkio.checkpoint import vacuum
@@ -240,3 +249,55 @@ def test_vacuum_grace_period_protects_fresh_orphans(spark, tmp_path):
     assert os.path.exists(os.path.join(root, "data", "run=inflight"))
     report = vacuum(root, min_age_hours=0)
     assert "data/run=inflight" in report["removed_run_dirs"]
+
+
+def _drop_bucket_sums(m):
+    del m["bucket_sums"]
+
+
+def _shorten_one_summary(m):
+    b = sorted(m["bucket_sums"], key=int)[0]
+    m["bucket_sums"][b] = m["bucket_sums"][b][:2]
+
+
+def _drop_lifetime_stats(m):
+    del m["lifetime_stats"]
+
+
+@pytest.mark.parametrize("damage, field, lifetime_raises", [
+    (_drop_bucket_sums, "bucket_sums", True),
+    (_shorten_one_summary, "bucket_sums", False),
+    (_drop_lifetime_stats, "lifetime_stats", True),
+], ids=["no_bucket_sums", "short_summary", "no_lifetime_stats"])
+def test_manifest_outside_the_format_is_refused(spark, tmp_path, damage, field,
+                                                lifetime_raises):
+    """The store reads one manifest format: every manifest carries
+    ``bucket_sums`` (a 3-field entry per committed bucket) and
+    ``lifetime_stats``.  A manifest missing either is refused with an error
+    naming the file and the field — no recompute, no fallback scan.
+    ``lifetime_totals`` reads only ``lifetime_stats``, so a short summary
+    entry does not concern it."""
+    root = str(tmp_path / "table")
+    inp = corpus_df(spark, 30, partitions=2)
+    run_incremental(spark, inp, root, n_buckets=4, num_partitions=2, run_id="v1")
+    store = SnapshotStore(root)
+    path = os.path.join(store.manifest_dir, "manifest-1.json")
+    with open(path) as f:
+        m = json.load(f)
+    damage(m)
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+    pattern = rf"manifest-1\.json.*{field}"
+    with pytest.raises(ValueError, match=pattern):
+        run_upsert(spark, inp, root, n_buckets=4, num_partitions=2, run_id="v2")
+    with pytest.raises(ValueError, match=pattern):
+        compact(spark, root, run_id="c")
+    with pytest.raises(ValueError, match=pattern):
+        store.live_doc_count()
+    if lifetime_raises:
+        with pytest.raises(ValueError, match=pattern):
+            store.lifetime_totals()
+    else:
+        assert store.lifetime_totals()["docs"] == 30
+    assert store._manifest_ids() == [1]  # nothing was committed on top

@@ -12,7 +12,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 
@@ -94,26 +93,3 @@ def test_noop_upsert_reads_zero_data_files(spark, tmp_path):
     finally:
         os.rename(hidden, data)
     assert r["snapshot_id"] is None and r["buckets"] == []
-
-
-def test_legacy_manifest_without_bucket_sums_falls_back(spark, tmp_path):
-    root = str(tmp_path / "t")
-    docs = make_corpus(30)
-    df = spark.createDataFrame(docs, INPUT_SCHEMA)
-    run_incremental(spark, df, root, n_buckets=4, num_partitions=2, run_id="v1")
-    store = SnapshotStore(root)
-    mpath = os.path.join(store.manifest_dir, "manifest-1.json")
-    m = json.load(open(mpath))
-    del m["bucket_sums"]
-    json.dump(m, open(mpath, "w"))
-    # Fallback recomputes summaries from the committed table: still a no-op
-    # for data, but the recomputed summaries PERSIST via a metadata-only
-    # commit (round-3 fix: without it every later upsert re-aggregates the
-    # whole table), so the snapshot advances while buckets stay untouched.
-    r = run_upsert(spark, df, root, n_buckets=4, num_partitions=2, run_id="v2")
-    assert r["buckets"] == [] and r["docs"] == 0
-    assert r["snapshot_id"] == 2
-    assert store.current_manifest()["buckets"] == m["buckets"]  # mapping unchanged
-    # With summaries persisted, the next upsert is a PURE no-op again.
-    r2 = run_upsert(spark, df, root, n_buckets=4, num_partitions=2, run_id="v3")
-    assert r2["snapshot_id"] is None and r2["buckets"] == []

@@ -137,7 +137,7 @@ def test_compact_vacuum_lifecycle_reclaims_superseded_dirs(spark, tmp_path):
 
 
 def test_compact_smallest_scope_merges_only_the_fragmented_tail(spark, tmp_path):
-    """Binpack scope (the 100-TB variant): keep the max_live_runs-1 biggest
+    """Binpack (compact's one policy): keep the max_live_runs-1 biggest
     runs PHYSICALLY untouched, merge only the small fragmented runs — an
     O(tail) rewrite instead of O(table)."""
     root = str(tmp_path / "table")
@@ -163,7 +163,7 @@ def test_compact_smallest_scope_merges_only_the_fragmented_tail(spark, tmp_path)
         r: sorted(glob.glob(os.path.join(root, "data", f"run={r}", "*")))
         for r in expect_kept}
 
-    r = compact(spark, root, max_live_runs=3, scope="smallest", run_id="bp")
+    r = compact(spark, root, max_live_runs=3, run_id="bp")
     assert r["runs_before"] == len(runs_before) and r["runs_after"] == 3
     live = set(store.committed_buckets().values())
     assert live == set(expect_kept) | {"bp"}
@@ -182,9 +182,9 @@ def test_compact_smallest_scope_merges_only_the_fragmented_tail(spark, tmp_path)
 
     # Within budget now: another binpack is a no-op; a FULL compact still
     # collapses to one dir and stays byte-identical.
-    r2 = compact(spark, root, max_live_runs=3, scope="smallest", run_id="bp2")
+    r2 = compact(spark, root, max_live_runs=3, run_id="bp2")
     assert r2["snapshot_id"] is None and r2["runs_before"] == 3
-    r3 = compact(spark, root, max_live_runs=1, scope="smallest", run_id="full")
+    r3 = compact(spark, root, max_live_runs=1, run_id="full")
     assert r3["runs_after"] == 1
     assert _snapshot_rows(spark, store) == before
 

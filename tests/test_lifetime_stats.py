@@ -9,7 +9,6 @@ against independent Spark aggregates over the written run dir."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyarrow as pa
@@ -42,17 +41,6 @@ def _lineage_totals(spark, store) -> dict:
            .sum("doc_count", "parse_failures", "rejected", "wall_ms")
            .collect()[0])
     return {k: int(v or 0) for k, v in zip(store.LIFETIME_KEYS, row)}
-
-
-def _strip_lifetime(store) -> None:
-    """Rewrite the CURRENT manifest without lifetime_stats (a table whose
-    last commit predates the feature)."""
-    name = open(os.path.join(store.manifest_dir, "CURRENT")).read().strip()
-    path = os.path.join(store.manifest_dir, name)
-    m = json.load(open(path))
-    m.pop("lifetime_stats", None)
-    with open(path, "w") as f:
-        json.dump(m, f)
 
 
 def test_lifetime_stats_match_lineage_across_incremental_runs(spark, tmp_path):
@@ -125,30 +113,6 @@ def test_lifetime_totals_launch_no_spark_jobs(spark, tmp_path):
     # The old report path ran a lineage aggregate job here on merge-bearing
     # tables; the manifest path must read metadata only.
     assert list(sc.statusTracker().getJobIdsForGroup("lifetime-stats-probe")) == []
-
-
-def test_legacy_manifest_falls_back_and_never_restarts_midstream(spark, tmp_path):
-    root = str(tmp_path / "table")
-    inp = corpus_df(spark, N_DOCS, partitions=4)
-    run_incremental(spark, inp, root, n_buckets=N_BUCKETS,
-                    num_partitions=4, run_id="a")
-    store = SnapshotStore(root)
-    _strip_lifetime(store)
-
-    # Fallback: one lineage aggregate, same numbers.
-    assert store.lifetime_totals(spark) == _lineage_totals(spark, store)
-
-    # A further commit onto a stripped parent must NOT restart accumulation
-    # from zero — prior work is unknown, so the field stays absent.
-    batch = spark.createDataFrame(
-        [{"doc_id": "new-9999",
-          "spans": [{"kind": "text_block", "text": "late arrival",
-                     "media_ref": "1,72,100,400,16,TOPLEFT,text",
-                     "offset": 0}]}], INPUT_SCHEMA)
-    run_merge_upsert(spark, batch, root, n_buckets=N_BUCKETS,
-                     num_partitions=2, run_id="late")
-    assert "lifetime_stats" not in store.current_manifest()
-    assert store.lifetime_totals(spark)["docs"] == N_DOCS + 1
 
 
 def _lineage_rows(rows) -> list[tuple]:

@@ -66,57 +66,6 @@ def test_upsert_reprocesses_only_dirty_buckets(spark, tmp_path):
     assert r3["buckets"] == [] and r3["snapshot_id"] is None
 
 
-def _strip_s2(store: SnapshotStore) -> None:
-    """Simulate a table committed by pre-s2 code: 2-element [n, s] summaries."""
-    import json
-    import os
-
-    name = open(os.path.join(store.manifest_dir, "CURRENT")).read().strip()
-    path = os.path.join(store.manifest_dir, name)
-    m = json.load(open(path))
-    m["bucket_sums"] = {b: s[:2] for b, s in m["bucket_sums"].items()}
-    with open(path, "w") as f:
-        json.dump(m, f)
-
-
-def test_upsert_migrates_pre_s2_summaries_once(spark, tmp_path):
-    """Round-3 review finding: summaries recomputed for pre-s2 manifests must
-    be PERSISTED — otherwise every upsert on a migrated table re-aggregates
-    all committed buckets forever, breaking the no-op-reads-zero invariant."""
-    root = str(tmp_path / "table")
-    v1 = make_corpus(N_DOCS)
-    df1 = spark.createDataFrame(v1, INPUT_SCHEMA)
-    run_incremental(spark, df1, root, n_buckets=N_BUCKETS, num_partitions=4, run_id="v1")
-    store = SnapshotStore(root)
-    _strip_s2(store)
-
-    # First no-op: recomputes summaries AND persists them (metadata-only
-    # commit — bucket mapping unchanged, snapshot advances).
-    r2 = run_upsert(spark, df1, root, n_buckets=N_BUCKETS, run_id="mig")
-    assert r2["buckets"] == [] and r2["docs"] == 0
-    assert r2["snapshot_id"] is not None
-    m = store.current_manifest()
-    assert all(len(s) == 3 for s in m["bucket_sums"].values())
-    assert set(m["buckets"]) == set(m["bucket_sums"])
-    assert store.live_doc_count() == N_DOCS
-
-    # Second no-op: detection is O(manifest) again — pure no-op, no commit.
-    r3 = run_upsert(spark, df1, root, n_buckets=N_BUCKETS, run_id="v3")
-    assert r3["buckets"] == [] and r3["snapshot_id"] is None
-
-    # Dirty path persists the CLEAN buckets' recomputed summaries too.
-    _strip_s2(store)
-    v2 = [_mutate(d) if i == 1 else d for i, d in enumerate(v1)]
-    r4 = run_upsert(spark, df1.sparkSession.createDataFrame(v2, INPUT_SCHEMA),
-                    root, n_buckets=N_BUCKETS, run_id="v4")
-    assert 0 < len(r4["buckets"]) < N_BUCKETS
-    m = store.current_manifest()
-    assert all(len(s) == 3 for s in m["bucket_sums"].values())
-    r5 = run_upsert(spark, df1.sparkSession.createDataFrame(v2, INPUT_SCHEMA),
-                    root, n_buckets=N_BUCKETS, run_id="v5")
-    assert r5["buckets"] == [] and r5["snapshot_id"] is None
-
-
 def test_upsert_handles_new_and_deleted_docs(spark, tmp_path):
     root = str(tmp_path / "table")
     v1 = make_corpus(60)
