@@ -1,8 +1,8 @@
 """Vectorized NumPy kernels for the embedding math (guide §4.2: hand whole
 Arrow batches to native code instead of interpreted per-element expression
-evaluation).  Every driver query whose quantizer or hyperplanes are Python
-lists (q40–q47) runs on these kernels; the Catalyst fold survives only where
-the quantizer is itself a DataFrame (ann._sq_dist_to_w).
+evaluation).  All embedding math runs on these kernels: q40–q48 and the
+live flat and two-level quantizers (the two-level fine level through a
+cogroup kernel); no Catalyst lambda fold is left.
 
 **The parity invariant.**  Every declared query's values are floor-scaled
 floats, so the kernels must reproduce the DuckDB oracles' sequential

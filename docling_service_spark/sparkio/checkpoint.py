@@ -189,7 +189,10 @@ class SnapshotStore:
 
         ``bucket_sums`` (bucket → [doc_count, sum, sum2], see
         ``_bucket_summaries``) is carried in the manifest so upserts can
-        detect clean buckets from metadata alone.
+        detect clean buckets from metadata alone.  Every bucket in
+        ``new_buckets`` needs a 3-field entry: without one the commit raises
+        ``ValueError`` before writing any file, since ``committed_sums``
+        would refuse the manifest.
 
         ``replace_lineage_runs`` sets the child manifest's ``lineage_runs``
         verbatim instead of appending ``run_id`` — used by metadata-only
@@ -225,13 +228,18 @@ class SnapshotStore:
                 raise SnapshotConflictError(
                     f"buckets {conflicts} were committed concurrently; aborting commit of run {run_id}"
                 )
+            given = {str(b): s for b, s in (bucket_sums or {}).items()}
+            bad = sorted(b for b in new_buckets
+                         if len(given.get(str(b)) or ()) != len(_EMPTY_SUM))
+            if bad:
+                raise ValueError(
+                    f"run {run_id}: bucket_sums has no [n, sum, sum2] entry for "
+                    f"new buckets {bad}; committed_sums would refuse the manifest")
             snapshot_id = (parent["snapshot_id"] + 1) if parent else 1
             buckets = dict(parent["buckets"]) if parent else {}
             for b in new_buckets:
                 buckets[str(b)] = run_id
-            sums = dict(parent["bucket_sums"]) if parent else {}
-            for b, s in (bucket_sums or {}).items():
-                sums[str(b)] = s
+            sums = {**(parent["bucket_sums"] if parent else {}), **given}
             if replace_lineage_runs is not None:
                 lineage_runs = list(replace_lineage_runs)
             else:

@@ -26,11 +26,11 @@ HEADER = '''"""Frozen two-level IVF quantizer (generated by
 scripts/freeze_centroids_2level.py).
 
 Trained ONCE with the deterministic two-level trainer (queries/ann.py
-train_ivf_2level: DataFrame-only coarse Lloyd, per-cell NumPy fine Lloyd,
-init = lowest vec_ids at each level, fixed iterations) at sf0.01 with
-k=16 split k1=4 x k2=4, and frozen so q47's hierarchical assignment is a
-pure static function of the input — full DuckDB oracle, same recipe as
-the flat FROZEN_CENTROIDS.  Values are repr() round-trips: both engines
+train_ivf_2level: coarse Lloyd on the NumPy argmin kernel, per-cell
+NumPy fine Lloyd, init = lowest vec_ids at each level, fixed iterations)
+at sf0.01 with k=16 split k1=4 x k2=4, and frozen so q47's hierarchical
+assignment is a pure static function of the input — full DuckDB oracle,
+same recipe as the flat FROZEN_CENTROIDS.  Values are repr() round-trips: both engines
 parse them to bit-identical doubles.
 """
 
@@ -45,7 +45,7 @@ def main() -> None:
     spark = get_spark(None, app_name="freeze-ivf2")
     spark.sparkContext.setLogLevel("ERROR")
     quant = train_ivf_2level(spark, SF_DIR, k=16, k1=4, iters=IVF_ITERS)
-    coarse = sorted(quant.coarse.collect(), key=lambda r: r["c"])
+    coarse = quant.coarse
     fine = sorted(quant.fine.collect(), key=lambda r: (r["coarse"], r["fine"]))
     quant_k1, quant_k2 = quant.k1, quant.k2
     quant.unpersist()
@@ -55,8 +55,8 @@ def main() -> None:
         f.write(HEADER)
         f.write(f"FROZEN2_K1 = {quant_k1}\nFROZEN2_K2 = {quant_k2}\n\n")
         f.write("FROZEN2_COARSE = [\n")
-        for r in coarse:
-            f.write("    [" + ", ".join(repr(float(x)) for x in r["w"]) + "],\n")
+        for w in coarse:
+            f.write("    [" + ", ".join(repr(float(x)) for x in w) + "],\n")
         f.write("]\n\nFROZEN2_FINE = [\n")
         for r in fine:
             f.write(f"    ({int(r['coarse'])}, {int(r['fine'])}, ["

@@ -100,22 +100,25 @@ PLAN_NOTES = [
      "AND the projection; the kernel removes both).  Scales embarrassingly."),
     ("q47_ivf2_assignments",
      "Two-level frozen-quantizer assignment: ONE zero-shuffle MapInArrow "
-     "kernel descends coarse-then-fine per batch (r9 — the DataFrame path "
-     "paid TWO groupBy(vec_id) shuffles of the embedding column; plan went "
-     "10 Exchanges to 0), bit-identical tie-breaks at both levels.  The "
-     "DataFrame-quantizer path (assign_ivf_2level) remains the 10^12-vector "
-     "story: both centroid tables stay DataFrames, zero driver state."),
+     "kernel descends coarse-then-fine per batch with the frozen 4x4 "
+     "quantizer in its closure, bit-identical tie-breaks at both levels.  "
+     "The live path (assign_ivf_2level) is the 10^12-vector story: the "
+     "coarse argmin kernel over a <= 32 MB driver list, then one cogroup "
+     "kernel per coarse cell against the fine table, which never leaves "
+     "the executors."),
     ("q48_ivf2_ann_topk",
-     "Hierarchical-descent ANN: probes take nprobe1 nearest of the 4-row "
-     "broadcast COARSE table, the tiny coarse-route set then broadcasts "
-     "INTO the fine table (the fine level itself is never broadcast — at "
-     "rule-sized k it is sqrt(k) rows per coarse cell), and the final "
-     "nprobe2-cluster route table broadcasts into the assigned vectors — "
-     "a partition-prune on cluster at 100 TB.  Per-probe routing work is "
-     "k1 + nprobe1*k2 ~ (1+nprobe1)*sqrt(k) distance folds vs q45's flat "
-     "k.  r9: assignment is the zero-shuffle frozen-quantizer Arrow kernel "
-     "and candidate scoring is the Arrow cosine kernel, so the rank "
-     "window's Exchange carries only (probe, neighbor, sim)."),
+     "Hierarchical-descent ANN over the frozen quantizer through the live "
+     "code path: the probe route kernel takes nprobe1 nearest of the "
+     "coarse list, the coarse routes and the assigned vectors each meet "
+     "the fine table in the fine cogroup kernel (FlatMapCoGroupsInArrow; "
+     "the fine level is never broadcast — at rule-sized k it is sqrt(k) "
+     "rows per coarse cell), a per-probe window cuts the nprobe1*nprobe2 "
+     "fine routes to nprobe2, and that route table broadcasts into the "
+     "assigned vectors — a partition-prune on cluster at 100 TB.  Per-"
+     "probe routing work is k1 + nprobe1*k2 ~ (1+nprobe1)*sqrt(k) distance "
+     "folds vs q45's flat k; no Catalyst lambda fold remains.  Candidate "
+     "scoring is the Arrow cosine kernel, so the rank window's Exchange "
+     "carries only (probe, neighbor, sim)."),
     ("q24_chunking",
      "Sliding-window chunking: tokens materialize once, chunks slice INSIDE "
      "a transform and posexplode — ZERO shuffles, output-sized bytes "

@@ -117,9 +117,9 @@ def main() -> None:
     def _lib_ivf2_rule_sized(spark, sf_dir):
         # r6 verdict #2: the two-level trainer at RULE-sized k — ivf_k_for
         # (20k) = 79 → split 9x9 — runs the applyInPandas fine trainer and
-        # the join-form assignment (_assign_df + the fine coarse-key join)
-        # live at a k no driver query reaches (the frozen q47/q48 hierarchy
-        # is 4x4).  Wall includes train + full-table assignment.
+        # the live assignment (coarse argmin kernel + the fine cogroup
+        # kernel) at a k no driver query reaches (the frozen q47/q48
+        # hierarchy is 4x4).  Wall includes train + full-table assignment.
         from docling_service_spark.queries.ann import (
             assign_ivf_2level,
             train_ivf_2level,

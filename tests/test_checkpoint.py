@@ -20,6 +20,12 @@ N_DOCS = 90
 N_BUCKETS = 8
 
 
+def sums_for(buckets):
+    """A well-formed [n, sum, sum2] entry per bucket, for commits that
+    write no data."""
+    return {b: [0, "0", "0"] for b in buckets}
+
+
 def test_incremental_resume_exactly_once(spark, tmp_path):
     root = str(tmp_path / "table")
     inp = corpus_df(spark, N_DOCS, partitions=4)
@@ -129,11 +135,24 @@ def test_concurrent_commit_conflict(spark, tmp_path):
 
     root = str(tmp_path / "table")
     store = SnapshotStore(root)
-    store.commit([0, 1], "winner")
+    store.commit([0, 1], "winner", bucket_sums=sums_for([0, 1]))
     with pytest.raises(SnapshotConflictError):
-        store.commit([1, 2], "loser")
+        store.commit([1, 2], "loser", bucket_sums=sums_for([1, 2]))
     # Non-overlapping concurrent commit is fine (disjoint buckets merge).
-    assert store.commit([2, 3], "other") == 2
+    assert store.commit([2, 3], "other", bucket_sums=sums_for([2, 3])) == 2
+
+
+def test_commit_refuses_new_buckets_without_sums(tmp_path):
+    """A new bucket with no 3-field entry is refused before any file is
+    written: a missing entry and a short one are both named."""
+    store = SnapshotStore(str(tmp_path / "table"))
+    store.commit([0], "r1", bucket_sums=sums_for([0]))
+    before = sorted(os.listdir(store.manifest_dir))
+    with pytest.raises(ValueError, match=r"run r2: .*new buckets \[1, 2\]"):
+        store.commit([1, 2, 3], "r2", bucket_sums={3: [1, "5", "7"], 1: [1, "5"]})
+    assert sorted(os.listdir(store.manifest_dir)) == before
+    assert store.current_manifest()["snapshot_id"] == 1
+    assert store.live_doc_count() == 0
 
 
 def test_vacuum_removes_orphans_keeps_live(spark, tmp_path):
@@ -169,7 +188,7 @@ def test_vacuum_expires_old_manifests(tmp_path):
     root = str(tmp_path / "t")
     store = SnapshotStore(root)
     for i in range(15):
-        store.commit([i], f"r{i}")
+        store.commit([i], f"r{i}", bucket_sums=sums_for([i]))
     report = vacuum(root, keep_manifests=5, min_age_hours=0)
     assert len(report["removed_manifests"]) == 10
     assert store.current_manifest()["snapshot_id"] == 15  # pointer intact

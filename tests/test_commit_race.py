@@ -23,6 +23,7 @@ from docling_service_spark.sparkio.checkpoint import (
     run_incremental,
     run_upsert,
 )
+from tests.test_checkpoint import sums_for
 from tests.test_upsert import INPUT_SCHEMA, make_corpus
 
 
@@ -37,7 +38,8 @@ def test_interleaved_disjoint_commits_both_land(tmp_path):
 
     def commit(store, name, buckets):
         barrier.wait()
-        ids[name] = store.commit(buckets, name, n_buckets=8)
+        ids[name] = store.commit(buckets, name, n_buckets=8,
+                                bucket_sums=sums_for(buckets))
 
     t1 = threading.Thread(target=commit, args=(a, "ra", [0, 1]))
     t2 = threading.Thread(target=commit, args=(b, "rb", [2, 3]))
@@ -52,17 +54,17 @@ def test_interleaved_disjoint_commits_both_land(tmp_path):
 def test_interleaved_conflicting_commit_raises_for_loser(tmp_path):
     root = str(tmp_path / "t")
     a, b = SnapshotStore(root), SnapshotStore(root)
-    a.commit([0, 1], "ra", n_buckets=8)
+    a.commit([0, 1], "ra", n_buckets=8, bucket_sums=sums_for([0, 1]))
     with pytest.raises(SnapshotConflictError):
-        b.commit([1, 2], "rb", n_buckets=8)
+        b.commit([1, 2], "rb", n_buckets=8, bucket_sums=sums_for([1, 2]))
     assert SnapshotStore(root).committed_buckets()["1"] == "ra"
 
 
 def test_current_pointer_is_advisory_and_forward_only(tmp_path):
     root = str(tmp_path / "t")
     s = SnapshotStore(root)
-    s.commit([0], "r1", n_buckets=4)
-    s.commit([1], "r2", n_buckets=4)
+    s.commit([0], "r1", n_buckets=4, bucket_sums=sums_for([0]))
+    s.commit([1], "r2", n_buckets=4, bucket_sums=sums_for([1]))
     cur = os.path.join(s.manifest_dir, "CURRENT")
     # Regress CURRENT manually: readers must still see snapshot 2.
     with open(cur, "w") as f:

@@ -19,6 +19,8 @@ from docling_service_spark.sparkio.checkpoint import (
     vacuum,
 )
 
+from tests.test_checkpoint import sums_for
+
 
 def _docs_with_source(spark, n, name="books.xlsx"):
     rows = []
@@ -105,7 +107,7 @@ def test_env_master_does_not_override_submit(monkeypatch):
 def test_vacuum_sweeps_stale_commit_tmps(spark, tmp_path):
     root = str(tmp_path / "t")
     store = SnapshotStore(root)
-    store.commit([0], "r1", n_buckets=2)
+    store.commit([0], "r1", n_buckets=2, bucket_sums=sums_for([0]))
     stale = os.path.join(store.manifest_dir, ".commit-dead-abc.tmp")
     with open(stale, "w") as f:
         f.write("{}")

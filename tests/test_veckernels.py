@@ -25,19 +25,9 @@ from docling_service_spark.queries.veckernels import (
     assign_argmin, component_min_labels, double_to_long, lsh_bucket_ids,
     nearest_centroids)
 
-from tests.test_entry_contract import _canon_rows
+from tests.test_entry_contract import SF_DIR as ORACLE_SF_DIR, _canon_rows
 
 SF_DIR = "/root/testdata/sf0.1"
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def _emb(spark):
-    return load(spark, SF_DIR, "embeddings").select(
-        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
-    )
 
 
 def _oracle_rows(sf_dir, sql):
@@ -61,23 +51,11 @@ def _assert_matches_oracle(spark, sf_dir, name):
 
 @pytest.mark.parametrize("name", [
     "q40_cosine_topk", "q41_lsh_buckets", "q42_lsh_bucketed_neighbors",
-    "q44_ivf_assignments", "q45_ivf_ann_topk", "q46_ivf_cluster_pairs"])
+    "q44_ivf_assignments", "q45_ivf_ann_topk", "q46_ivf_cluster_pairs",
+    "q47_ivf2_assignments", "q48_ivf2_ann_topk"])
 def test_kernel_query_matches_oracle_at_sf0_1(spark, name):
     """The kernel queries against their DuckDB oracles at sf0.1."""
     _assert_matches_oracle(spark, SF_DIR, name)
-
-
-def test_assign2_arrow_matches_dataframe_path(spark):
-    """Two-level frozen assignment: one-kernel descent vs the DataFrame
-    join/groupBy path (q47's full output)."""
-    emb = _emb(spark)
-    jvm = ann.assign_ivf_2level(emb, ann._frozen2_quantizer(spark)).select(
-        "vec_id",
-        F.col("cluster").cast("bigint").alias("cluster"),
-        F.floor(F.col("sq_dist") * 1_000_000).cast("bigint").alias("sq_dist_e6"),
-    )
-    arrow = ann._assign2_frozen_arrow(emb)
-    assert _rows(arrow) == _rows(jvm)
 
 
 # Centroids whose squared distances to the zero vector are [NaN, inf, 5, 5]:
@@ -177,12 +155,24 @@ def test_q41_adversarial_table_matches_oracle(spark, tmp_path):
     _assert_matches_oracle(spark, str(tmp_path), "q41_lsh_buckets")
 
 
-@pytest.mark.parametrize("name", sorted(n for n in QUERIES if "q40" <= n < "q48"))
+_PLAN_CASES = {
+    **{n: QUERIES[n] for n in QUERIES if "q40" <= n < "q49"},
+    "assign_ivf_2level": lambda spark, sf_dir: ann.assign_ivf_2level(
+        load(spark, sf_dir, "embeddings").select(
+            F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"),
+        ann._frozen2_quantizer(spark)),
+    "ivf2_ann_topk": lambda spark, sf_dir: ann.ivf2_ann_topk(
+        spark, sf_dir, ann._frozen2_quantizer(spark)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PLAN_CASES))
 def test_kernel_query_plans_have_no_lambda_folds(spark, name):
-    """q40–q47 take their quantizer or hyperplanes as Python lists, so all
-    their embedding math runs in NumPy kernels: no Catalyst lambda fold may
+    """q40–q48 and the two-level library paths take their hyperplanes or
+    quantizer levels as Python lists or centroid tables, so all their
+    embedding math runs in NumPy kernels: no Catalyst lambda fold may
     remain in the optimized plan."""
-    df = QUERIES[name](spark, "/root/testdata/sf0.01")
+    df = _PLAN_CASES[name](spark, ORACLE_SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "lambdafunction" not in plan.lower()
 
