@@ -223,6 +223,8 @@ def main(argv=None) -> int:
         "snapshot_id": summary["snapshot_id"],
         "buckets_processed": len(summary["buckets"]),
         "docs_this_run": summary["docs"],
+        # Lineage books one row per Python task that extracted a row.
+        "python_tasks": summary.get("python_tasks", 0),
         # lineage totals record WORK done across all runs (upserts reprocess);
         # docs_in_snapshot is the live table size.
         "docs_processed_all_runs": totals["docs"],
@@ -241,6 +243,8 @@ def main(argv=None) -> int:
         "run_wall_sec": round(wall, 2),
         "docs_per_sec": round(summary["docs"] / wall, 2) if wall > 0 else None,
     }
+    if args.merge_upsert:
+        report["docs_changed"] = summary["docs_changed"]
     if args.markdown_store:
         report["markdown_uploaded"] = upload_run_markdown(
             spark, args.output, args.markdown_store, summary,

@@ -180,6 +180,52 @@ def test_run_stats_match_spark_aggregates_of_the_same_run(spark, tmp_path):
         int(b): v for b, v in cp._bucket_summaries(written).items()}
 
 
+def test_merge_fingerprints_equal_a_scan_of_the_written_run(spark, tmp_path):
+    """A merge takes each dirty bucket's fingerprint from the parent
+    manifest's sums, less the replaced rows' old-hash sums, plus the kernel
+    accumulator's sums; it never reads back its run dir.  Over one batch
+    holding every kind of row a merge meets, on a partly uncommitted table,
+    those sums must equal _bucket_summaries over the written run dir."""
+    root = str(tmp_path / "table")
+    docs = make_corpus(N_DOCS)
+    run_incremental(spark, spark.createDataFrame(docs, INPUT_SCHEMA), root,
+                    n_buckets=N_BUCKETS, max_buckets_per_run=5, run_id="base")
+    store = SnapshotStore(root)
+    committed = {int(b) for b in store.current_manifest()["buckets"]}
+    assert 0 < len(committed) < N_BUCKETS
+
+    def text_doc(doc_id, text):
+        return {"doc_id": doc_id, "spans": [{
+            "kind": "text_block", "text": text,
+            "media_ref": "1,72,100,400,16,TOPLEFT,text", "offset": 0}]}
+
+    candidates = [text_doc(f"new-{i:04d}", f"fresh {i}") for i in range(64)]
+    bucket = {r["doc_id"]: r["_bucket"] for r in cp.prepare_input(
+        spark.createDataFrame(docs + candidates, INPUT_SCHEMA), N_BUCKETS,
+    ).select("doc_id", "_bucket").collect()}
+    replaced = next(d for d in docs if bucket[d["doc_id"]] in committed)
+    unchanged = next(d for d in docs if d is not replaced
+                     and bucket[d["doc_id"]] == bucket[replaced["doc_id"]])
+    new_committed = next(d for d in candidates if bucket[d["doc_id"]] in committed)
+    new_uncommitted = next(d for d in candidates
+                           if bucket[d["doc_id"]] not in committed)
+    failure = {"doc_id": "new-failed", "spans": None}
+    batch = [text_doc(replaced["doc_id"], "rev2"), unchanged, new_committed,
+             new_uncommitted, failure]
+    cap = max(_span_bytes(d["spans"]) for d in batch if d["spans"])
+    batch.append(text_doc("new-reject", "x" * (cap + 1)))
+
+    s = run_merge_upsert(spark, spark.createDataFrame(batch, INPUT_SCHEMA), root,
+                         n_buckets=N_BUCKETS, run_id="m", max_doc_bytes=cap)
+    assert s["docs_changed"] == 5  # everything but the unchanged doc
+    assert s["run_stats"]["parse_failures"] == 1 and s["run_stats"]["rejected"] == 1
+    assert bucket[new_uncommitted["doc_id"]] in s["buckets"]
+    sums = store.current_manifest()["bucket_sums"]
+    assert {str(b): sums[str(b)] for b in s["buckets"]} == cp._bucket_summaries(
+        _run_dir(spark, root, "m"))
+    assert store.live_doc_count() == store.read_output(spark).count()
+
+
 @pytest.mark.parametrize("null_col", ["_bucket", "_input_hash"])
 def test_fold_bucket_sums_refuses_null_passthrough(null_col):
     """A skipped or NaN-mangled fold would commit a wrong fingerprint, and

@@ -189,6 +189,31 @@ def test_merge_into_empty_table(spark, tmp_path):
     assert SnapshotStore(root).read_output(spark).count() == 5
 
 
+def test_small_merge_runs_one_python_task_at_default_shuffle_partitions(spark, tmp_path):
+    """The changed docs reach the kernel in as few Python tasks as they fill:
+    the persisted diff keeps the shuffle's partition count, and every Python
+    task pays a fixed worker set-up cost.  Lineage books one row per Python
+    task that extracted a row, so a 5-doc merge at Spark's default 200
+    shuffle partitions books exactly one."""
+    root = str(tmp_path / "table")
+    v1 = make_corpus(N_DOCS)
+    run_incremental(spark, spark.createDataFrame(v1, INPUT_SCHEMA), root,
+                    n_buckets=N_BUCKETS, num_partitions=2, run_id="base")
+    batch = [_mutate(v1[3]), _mutate(v1[7]), _fresh_doc(1), _fresh_doc(2),
+             _fresh_doc(3)]
+    pinned = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        r = run_merge_upsert(spark, spark.createDataFrame(batch, INPUT_SCHEMA),
+                             root, n_buckets=N_BUCKETS, run_id="m")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", pinned)
+    rows = (SnapshotStore(root).read_lineage(spark)
+            .filter(F.col("run_id") == "m").collect())
+    assert [row["doc_count"] for row in rows] == [5]
+    assert r["docs_changed"] == 5 and r["python_tasks"] == 1
+
+
 def _land_wave(spark, path, docs, name, schema=INPUT_SCHEMA):
     tmp = f"{path}.{name}.tmp"
     spark.createDataFrame(docs, schema).coalesce(1).write.parquet(tmp)

@@ -41,23 +41,33 @@ def test_py_files_zip_deployment(tmp_path):
 
     env = os.environ.copy()
     env.pop("PYTHONPATH", None)  # the zip must be the only package source
-    res = subprocess.run(
-        ["spark-submit", "--master", "local[4]", "--driver-memory", "8g",
-         "--py-files", "engine.zip", "job.py",
-         "--output", str(out), "--n-docs", "400", "--n-buckets", "8",
-         "--run-id", "zip1"],
-        cwd=bare, env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert res.returncode == 0, res.stderr[-3000:]
-    report = json.loads(res.stdout.strip().splitlines()[-1])
+
+    def job(n_docs, run_id, *extra):
+        res = subprocess.run(
+            ["spark-submit", "--master", "local[4]", "--driver-memory", "8g",
+             "--py-files", "engine.zip", "job.py",
+             "--output", str(out), "--n-docs", str(n_docs), "--n-buckets", "8",
+             "--run-id", run_id, *extra],
+            cwd=bare, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert res.returncode == 0, res.stderr[-3000:]
+        return json.loads(res.stdout.strip().splitlines()[-1])
+
+    import duckdb
+
+    def lineage_rows(run_id):
+        return duckdb.sql(f"select count(*) from read_parquet("
+                          f"'{out}/lineage/run={run_id}/*.parquet')").fetchone()[0]
+
+    report = job(400, "zip1")
     assert report["run_id"] == "zip1"
     assert report["buckets_processed"] == 8
     assert report["docs_in_snapshot"] == 400
+    assert report["python_tasks"] == lineage_rows("zip1") > 0
+    assert "docs_changed" not in report
 
     # The committed snapshot is a real table: manifest present, every doc
     # exactly once when routed bucket→run via the manifest.
-    import duckdb
-
     current = (out / "_manifests" / "CURRENT").read_text().strip()
     manifest = json.loads((out / "_manifests" / current).read_text())
     runs = {}
@@ -73,3 +83,10 @@ def test_py_files_zip_deployment(tmp_path):
         + " union all ".join(parts) + ")"
     ).fetchone()
     assert (distinct, total) == (400, 400)
+
+    # A merge of the same generator's first 420 docs changes only the 20
+    # new ones, and extracts them in one Python task.
+    merge = job(420, "zip2", "--merge-upsert")
+    assert merge["docs_changed"] == 20
+    assert merge["python_tasks"] == lineage_rows("zip2") == 1
+    assert merge["docs_in_snapshot"] == 420
