@@ -276,6 +276,3 @@ def make_extract_kernel(max_doc_bytes: int = MAX_DOC_BYTES, stats_acc=None):
             stats_acc.add(local_stats)
 
     return extract_batches
-
-
-extract_batches = make_extract_kernel()

@@ -15,6 +15,10 @@ Iceberg-shaped emulation (no Iceberg jars offline — SURVEY.md §4 item 2):
     physical ``partitionBy("bucket")`` fanout write was measured to cost more
     than the whole extraction at 120k docs — tasks × buckets tiny files.)
 
+    This module is the only code that knows the layout: every other module
+    reads rows through ``SnapshotStore.read_buckets`` (or ``read_output`` /
+    ``read_docs`` on top of it), never through a ``run=`` path.
+
 Semantics that must stay honest:
 
 - **Atomic commit**: a run's files become visible only when CURRENT is
@@ -33,6 +37,7 @@ set, batch-wise persistence).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -101,6 +106,16 @@ def _runs_to_buckets(m: Optional[dict], only=None) -> dict[str, list[int]]:
     return out
 
 
+def _refuse_reused_run_id(m: Optional[dict], run_id: str) -> None:
+    """A run writes its files under its id with overwrite semantics, so an
+    id that manifest ``m`` already references would erase that run's
+    committed files.  Raise before anything is written."""
+    if m and (run_id in m["buckets"].values() or run_id in m["lineage_runs"]):
+        raise ValueError(
+            f"run_id {run_id!r} is already referenced by snapshot {m['snapshot_id']}; "
+            f"reusing it would overwrite that run's committed files")
+
+
 class SnapshotConflictError(RuntimeError):
     """A concurrent run committed one of our buckets first (optimistic
     concurrency, the file-store analog of Iceberg's commit validation).
@@ -113,6 +128,11 @@ class SnapshotStore:
         self.root = root
         self.manifest_dir = os.path.join(root, "_manifests")
         os.makedirs(self.manifest_dir, exist_ok=True)
+
+    def _run_dir(self, kind: str, run_id: str) -> str:
+        """Where run ``run_id`` keeps its ``kind`` ("data" or "lineage")
+        files — the one place the table's physical layout is spelled out."""
+        return os.path.join(self.root, kind, f"run={run_id}")
 
     # -- manifest plumbing ---------------------------------------------------
 
@@ -320,51 +340,44 @@ class SnapshotStore:
 
     # -- readers ---------------------------------------------------------------
 
-    def read_output(self, spark: SparkSession, *, instrumented: bool = False) -> DataFrame:
-        """Union of per-run reads, each filtered to the buckets the CURRENT
-        manifest maps to that run — an upsert shadows a bucket's old rows by
+    def read_buckets(self, spark: SparkSession, buckets=None, *,
+                     manifest: Optional[dict] = None) -> DataFrame:
+        """Instrumented rows of ``buckets`` (default: every committed bucket)
+        as of ``manifest`` (default: the current one).  Each bucket is read
+        from the run dir the manifest maps it to, filtered to the buckets
+        that run still owns — an upsert shadows a bucket's old rows by
         remapping it, and this filter (pushed into the parquet scan) is what
-        makes the shadowing effective without rewriting old files."""
-        df = self._read_runs(spark, _runs_to_buckets(self.current_manifest()))
-        return df if instrumented else strip_instrumentation(df)
-
-    def _read_runs(self, spark: SparkSession, runs: dict[str, list[int]]) -> DataFrame:
-        """Instrumented union over a SUBSET of run dirs, each filtered to its
-        live buckets (the read_output pattern; also the compaction source,
-        which must scan only the runs being merged).  No runs → empty frame."""
+        makes the shadowing effective without rewriting old files.  No
+        committed bucket selected → empty frame."""
+        m = self.current_manifest() if manifest is None else manifest
+        runs = _runs_to_buckets(m, buckets)
         if not runs:
             return spark.createDataFrame([], INSTRUMENTED_DDL)
-        parts = []
-        for run_id, buckets in sorted(runs.items()):
-            df = spark.read.schema(INSTRUMENTED_DDL).parquet(
-                os.path.join(self.root, "data", f"run={run_id}")
-            )
-            parts.append(df.filter(F.col("_bucket").isin(buckets)))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        parts = [spark.read.schema(INSTRUMENTED_DDL).parquet(self._run_dir("data", run_id))
+                 .filter(F.col("_bucket").isin(sorted(bs)))
+                 for run_id, bs in sorted(runs.items())]
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    def read_output(self, spark: SparkSession, *, instrumented: bool = False) -> DataFrame:
+        """Every live row of the current snapshot."""
+        df = self.read_buckets(spark)
+        return df if instrumented else strip_instrumentation(df)
 
     def read_docs(self, spark: SparkSession, doc_ids: list[str],
                   *, instrumented: bool = False) -> DataFrame:
-        """Point lookups with bucket pruning: the manifest maps each doc's
-        bucket to exactly one run dir, so a k-doc lookup scans only the
-        owning runs' files with `_bucket` + `doc_id` filters pushed into the
+        """Point lookups with bucket pruning: only the buckets of the wanted
+        docs are read, with `_bucket` + `doc_id` filters pushed into the
         parquet scan — O(k buckets) of the table, not O(table).  (Iceberg's
         metadata-pruned point read, on the manifest-only bucket layout.)"""
         m = self.current_manifest()
-        wanted: dict[str, set] = {}  # run_id -> buckets
+        buckets: list[int] = []
         if m and doc_ids:
-            n_buckets = m["n_buckets"]
             # Buckets via the same JVM hash the writer used (one tiny local job).
             id_df = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
-            for r in id_df.select(
-                F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias("b")
-            ).collect():
-                run = m["buckets"].get(str(r["b"]))
-                if run is not None:
-                    wanted.setdefault(run, set()).add(r["b"])
-        df = self._read_runs(spark, {r: sorted(bs) for r, bs in wanted.items()})
+            buckets = [r["b"] for r in id_df.select(
+                F.pmod(F.xxhash64("doc_id"), F.lit(m["n_buckets"])).cast("int").alias("b")
+            ).collect()]
+        df = self.read_buckets(spark, buckets, manifest=m)
         df = df.filter(F.col("doc_id").isin(list(doc_ids)))
         return df if instrumented else strip_instrumentation(df)
 
@@ -388,7 +401,7 @@ class SnapshotStore:
     def read_lineage(self, spark: SparkSession) -> DataFrame:
         m = self.current_manifest()
         runs = m["lineage_runs"] if m else []
-        paths = [os.path.join(self.root, "lineage", f"run={r}") for r in runs]
+        paths = [self._run_dir("lineage", r) for r in runs]
         paths = [p for p in paths if os.path.exists(p)]
         if not paths:
             return spark.createDataFrame([], LINEAGE_DDL)
@@ -523,18 +536,17 @@ def compact(
                    "runs_before": len(live_runs), "runs_after": len(live_runs)}
         notify_completion(on_complete, {**summary, "status": "noop", "detail": None})
         return summary
+    _refuse_reused_run_id(m, run_id)
     expected_parent = m["snapshot_id"]
     # Keep the biggest runs by live docs (ties: the larger run id); merge
     # the rest.
     keep = max(max_live_runs, 1) - 1
     ranked = sorted(live_runs, reverse=True, key=lambda r: (
         sum(int(all_sums[str(b)][0]) for b in runs_to_buckets[r]), r))
-    merge_runs = {r: runs_to_buckets[r] for r in ranked[keep:]}
-    buckets = sorted(b for bs in merge_runs.values() for b in bs)
+    buckets = sorted(b for r in ranked[keep:] for b in runs_to_buckets[r])
     try:
-        out = store._read_runs(spark, merge_runs)
-        data_dir = os.path.join(root, "data", f"run={run_id}")
-        out.write.parquet(data_dir, mode="overwrite")
+        out = store.read_buckets(spark, buckets, manifest=m)
+        out.write.parquet(store._run_dir("data", run_id), mode="overwrite")
         # Content is unchanged, so the parent's sums are exact: no scan.
         sums = {str(b): all_sums[str(b)] for b in buckets}
         # Metadata-only commit: no lineage dir is written (row content moved,
@@ -599,10 +611,10 @@ def compact_lineage(
                    "runs_before": len(existing), "runs_after": len(existing)}
         notify_completion(on_complete, {**summary, "status": "noop", "detail": None})
         return summary
+    _refuse_reused_run_id(m, run_id)
     expected_parent = m["snapshot_id"]
-    dirs = [p for r in existing
-            if os.path.exists(p := os.path.join(root, "lineage", f"run={r}"))]
-    dst = os.path.join(root, "lineage", f"run={run_id}")
+    dirs = [p for r in existing if os.path.exists(p := store._run_dir("lineage", r))]
+    dst = store._run_dir("lineage", run_id)
     try:
         src = (spark.read.schema(LINEAGE_DDL).parquet(*dirs) if dirs
                else spark.createDataFrame([], LINEAGE_DDL))
@@ -666,17 +678,17 @@ def run_incremental(
     if len(todo) < n_buckets:
         prepared = prepared.filter(F.col("_bucket").isin([int(b) for b in todo]))
 
-    return _run_with_hook(spark, store, prepared, root, todo, run_id, on_complete,
+    return _run_with_hook(spark, store, prepared, todo, run_id, on_complete,
                           num_partitions=num_partitions, allow_overwrite=False,
                           n_buckets=n_buckets, max_doc_bytes=max_doc_bytes)
 
 
-def _run_with_hook(spark, store, prepared, root, buckets, run_id, on_complete, *,
+def _run_with_hook(spark, store, prepared, buckets, run_id, on_complete, *,
                    num_partitions, allow_overwrite, n_buckets, max_doc_bytes=None,
                    carry_rows=None, carry_sums=None, expected_parent="__unset__",
                    extra_summary=None) -> dict:
     try:
-        summary = _process_and_commit(spark, store, prepared, root, buckets, run_id,
+        summary = _process_and_commit(spark, store, prepared, buckets, run_id,
                                       num_partitions=num_partitions,
                                       allow_overwrite=allow_overwrite,
                                       n_buckets=n_buckets,
@@ -797,7 +809,7 @@ class _RunStatsParam:
         return a
 
 
-def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
+def _process_and_commit(spark, store, prepared, buckets, run_id, *,
                         num_partitions, allow_overwrite, n_buckets,
                         max_doc_bytes=None, carry_rows=None, carry_sums=None,
                         expected_parent="__unset__") -> dict:
@@ -807,6 +819,7 @@ def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
     # design (no Exchange before mapInArrow), so the split of THAT stage is
     # the lineage table's per-partition wall_ms (pure Python time) vs the
     # remainder (scan + write + codec).
+    _refuse_reused_run_id(store.current_manifest(), run_id)
     timings: dict[str, int] = {}
     t0 = time.perf_counter()
     # Run stats are the one channel the kernel folds into the write itself
@@ -826,8 +839,7 @@ def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
         # keeps them live without re-extracting.
         out = out.unionByName(carry_rows)
 
-    data_dir = os.path.join(root, "data", f"run={run_id}")
-    out.write.parquet(data_dir, mode="overwrite")
+    out.write.parquet(store._run_dir("data", run_id), mode="overwrite")
     timings["extract_and_write_ms"] = int((time.perf_counter() - t0) * 1000)
 
     t0 = time.perf_counter()
@@ -875,7 +887,7 @@ def _process_and_commit(spark, store, prepared, root, buckets, run_id, *,
           "bytes": int(v[1]), "parse_failures": int(v[2]),
           "rejected": int(v[3]), "wall_ms": int(v[4])}
          for pid, v in lineage_stats],
-        os.path.join(root, "lineage", f"run={run_id}"))
+        store._run_dir("lineage", run_id))
     timings["lineage_ms"] = int((time.perf_counter() - t0) * 1000)
     summary = {"run_id": run_id, "snapshot_id": snapshot_id, "buckets": buckets,
                "docs": docs, "timings_ms": timings,
@@ -932,7 +944,7 @@ def run_upsert(
         return summary
 
     todo_input = prepared.filter(F.col("_bucket").isin(dirty_buckets))
-    return _run_with_hook(spark, store, todo_input, root, dirty_buckets, run_id, on_complete,
+    return _run_with_hook(spark, store, todo_input, dirty_buckets, run_id, on_complete,
                           num_partitions=num_partitions, allow_overwrite=True,
                           n_buckets=n_buckets, max_doc_bytes=max_doc_bytes)
 
@@ -967,7 +979,9 @@ def run_merge_upsert(
     materialized into the rewritten buckets (kept + changed — the bucket
     summaries are derived from them); ``docs_changed`` is this batch's real
     work (lineage books only the changed rows, so merge runs never re-book
-    carried siblings' extraction metrics).
+    carried siblings' extraction metrics); ``batch_buckets`` lists every
+    bucket the batch's docs hash to, committed or not (a no-op replay's
+    markdown upload reads its docs back from them).
 
     Duplicate doc_ids WITHIN one batch (two versions of the same doc in one
     trigger) collapse to one row before diffing — the pick is deterministic
@@ -1012,8 +1026,8 @@ def run_merge_upsert(
                          prepared.select("_bucket").distinct().collect())
         committed_touched = [b for b in touched if str(b) in committed_sums]
         if committed_touched:
-            old_keys = store._read_runs(
-                spark, _runs_to_buckets(parent_manifest, committed_touched),
+            old_keys = store.read_buckets(
+                spark, committed_touched, manifest=parent_manifest,
             ).select("doc_id", F.col("_input_hash").alias("_old_hash"))
             # _old_hash stays on until the per-bucket job has summed the
             # replaced rows' fingerprints.
@@ -1046,15 +1060,15 @@ def run_merge_upsert(
             dirty_buckets = sorted(per_bucket)
             if not dirty_buckets:
                 summary = {"run_id": run_id, "snapshot_id": None, "buckets": [],
-                           "docs": 0, "docs_changed": 0}
+                           "docs": 0, "docs_changed": 0, "batch_buckets": touched}
                 notify_completion(on_complete, {**summary, "status": "noop", "detail": None})
                 return _finish(summary)
             n_changed = sum(r["n"] for r in per_bucket.values())
             dirty_committed = [b for b in dirty_buckets if str(b) in committed_sums]
             carry, carry_sums = None, {}
             if dirty_committed:
-                carry = store._read_runs(
-                    spark, _runs_to_buckets(parent_manifest, dirty_committed),
+                carry = store.read_buckets(
+                    spark, dirty_committed, manifest=parent_manifest,
                 ).join(changed.select("doc_id"), "doc_id", "left_anti")
                 # The carried rows are the parent's rows less the replaced
                 # ones, and so are their fingerprint sums.
@@ -1075,12 +1089,12 @@ def run_merge_upsert(
             batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
             n_tasks = -(-n_changed // batch_rows) if batch_rows > 0 else 1
             return _finish(_run_with_hook(
-                spark, store, changed.drop("_old_hash").coalesce(n_tasks), root,
+                spark, store, changed.drop("_old_hash").coalesce(n_tasks),
                 dirty_buckets, run_id, on_complete,
                 num_partitions=num_partitions, allow_overwrite=True,
                 n_buckets=n_buckets, max_doc_bytes=max_doc_bytes, carry_rows=carry,
                 carry_sums=carry_sums, expected_parent=expected_parent,
-                extra_summary={"docs_changed": n_changed},
+                extra_summary={"docs_changed": n_changed, "batch_buckets": touched},
             ))
         finally:
             if own_changed:

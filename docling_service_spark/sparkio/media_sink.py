@@ -128,10 +128,12 @@ def markdown_key(doc_id: str, original_name: Optional[str] = None) -> str:
 
 
 def _markdown_worklist(output_df: DataFrame,
-                       names_df: Optional[DataFrame] = None) -> DataFrame:
+                       names_df: Optional[DataFrame] = None,
+                       *, how: str = "left") -> DataFrame:
     """(doc_id, key, markdown) for every completed doc.  ``names_df``
     (doc_id, original_name) supplies upload filenames; url-kind and
-    unnamed docs fall back to ``{doc_id}.md`` like the reference."""
+    unnamed docs fall back to ``{doc_id}.md`` like the reference.
+    ``how="inner"`` also drops the docs ``names_df`` does not list."""
     work = output_df.filter(F.col("status") == "completed") \
                     .select("doc_id", "markdown")
     if names_df is not None:
@@ -139,12 +141,12 @@ def _markdown_worklist(output_df: DataFrame,
         # output), so at scale this is an equi-join on doc_id that AQE plans
         # as SMJ/shuffle-hash; forcing broadcast would ship the whole corpus'
         # names to every task.  dropDuplicates is a fan-out SAFETY NET only
-        # (an undeduped left join would duplicate upload rows); its pick is
+        # (an undeduped join would duplicate upload rows); its pick is
         # arbitrary, so merge-mode callers must pre-dedup names with the SAME
-        # version rule that picked the kept content (job.py resolves via
-        # prepare_input's max-_input_hash window before passing names here).
+        # version rule that picked the kept content (upload_batch_markdown
+        # takes them from run_merge_upsert's deduped frame).
         names = names_df.select("doc_id", "original_name").dropDuplicates(["doc_id"])
-        work = work.join(names, "doc_id", "left")
+        work = work.join(names, "doc_id", how)
     else:
         work = work.withColumn("original_name", F.lit(None).cast("string"))
     fname = F.coalesce(F.col("original_name"), F.concat(F.col("doc_id"), F.lit(".md")))
@@ -169,7 +171,14 @@ def upload_markdown(output_df: DataFrame, base_path: Optional[str] = None,
     exists-checks markdown either, app/main.py:866), which also makes
     re-runs idempotent: same input ⇒ same bytes.
     """
-    work = _markdown_worklist(output_df, names_df).persist()
+    return _put_markdown(_markdown_worklist(output_df, names_df), base_path,
+                         store_factory)
+
+
+def _put_markdown(work: DataFrame, base_path: Optional[str],
+                  store_factory=None) -> int:
+    """Put each (key, markdown) row of ``work``; returns the row count."""
+    work = work.persist()
 
     def sink(rows) -> None:
         from ..storage import make_store
@@ -185,59 +194,38 @@ def upload_markdown(output_df: DataFrame, base_path: Optional[str] = None,
         work.unpersist()
 
 
-def _upload_batch_docs_markdown(output_df: DataFrame, prepared: DataFrame,
-                                store_path) -> int:
-    """Shared tail of the merge-mode upload rule: restrict to the batch's
-    own docs and name them from the SAME kept version that won the content
-    pick (``dedup_latest_version`` ran inside ``run_merge_upsert``), so
-    filename and content can never desynchronize."""
-    written = output_df.join(prepared.select("doc_id"), "doc_id", "left_semi")
-    names = None
-    if "source" in prepared.columns:
-        names = prepared.select(
-            "doc_id", F.col("source.original_name").alias("original_name"))
-    return upload_markdown(written, store_path, names_df=names)
+def upload_batch_markdown(spark, table_root: str, batch: Optional[DataFrame],
+                          buckets: list, store_path) -> int:
+    """Upload one batch's markdown blobs, read back from the table's
+    ``buckets`` through the snapshot store — THE upload rule behind
+    ``job.py --markdown-store`` and ``stream_merge_upsert(markdown_store=)``,
+    so batch and stream cannot drift.  Returns the upload count.
 
+    ``buckets`` is the run's committed buckets, or, for a no-op merge, the
+    buckets the batch hashes to (``run_merge_upsert``'s ``batch_buckets``):
+    a merge that crashed between its commit and its upload replays as a
+    zero-changed no-op, yet its docs are live there, and re-putting
+    doc-addressed blobs is idempotent.
 
-def upload_merge_run_markdown(spark, table_root: str, run_id: str,
-                              prepared: DataFrame, store_path) -> int:
-    """Upload ONE merge run's markdown blobs — THE merge-mode upload rule,
-    shared by ``job.py --merge-upsert --markdown-store`` and the streaming
-    twin (``stream_merge_upsert(markdown_store=)``) so batch and stream
-    cannot drift.  Restricted to the batch's own docs: a merge run dir also
-    carries same-bucket sibling docs absent from the batch, and uploading
-    those would mint a new ``{doc_id}.md`` key beside their original
-    upload."""
-    import os
-
-    from .batch import INSTRUMENTED_DDL
-    from .pipeline import strip_instrumentation
-
-    run_dir = os.path.join(table_root, "data", f"run={run_id}")
-    written = strip_instrumentation(
-        spark.read.schema(INSTRUMENTED_DDL).parquet(run_dir))
-    return _upload_batch_docs_markdown(written, prepared, store_path)
-
-
-def upload_committed_markdown(spark, table_root: str, prepared: DataFrame,
-                              store_path) -> int:
-    """Replay-recovery twin of ``upload_merge_run_markdown``: upload the
-    batch's blobs from the COMMITTED snapshot instead of a specific run dir.
-
-    Why it exists (review finding): a streaming merge that crashes AFTER its
-    commit but BEFORE the markdown upload replays as a zero-changed-docs
-    no-op — the docs are live in the table, but no run dir identifies them
-    and the upload would be skipped forever.  Puts are doc-addressed
-    last-writer-wins, so re-uploading an already-uploaded batch is
-    idempotent (same input ⇒ same bytes); the read is bucket-pruned to the
-    batch's buckets, so recovery costs O(touched buckets), not O(table)."""
+    ``batch`` is the frame whose docs to upload.  A merge's buckets also hold
+    same-bucket siblings absent from the batch, and uploading those would
+    mint a new ``{doc_id}.md`` key beside their original upload, so only
+    ``batch``'s docs are kept, named by its ``source.original_name`` when it
+    has one (pass the merge's deduped frame, so name and content come from
+    the same kept version).  ``None``: the buckets hold nothing but this
+    run's own docs (an incremental or wholesale-upsert run over an input
+    without ``source``), so every doc uploads as ``{doc_id}.md``."""
+    if not buckets:
+        return 0
     from .checkpoint import SnapshotStore
-    from .pipeline import strip_instrumentation
 
-    buckets = [r["_bucket"] for r in prepared.select("_bucket").distinct().collect()]
-    out = SnapshotStore(table_root).read_output(spark, instrumented=True)
-    written = strip_instrumentation(out.filter(F.col("_bucket").isin(buckets)))
-    return _upload_batch_docs_markdown(written, prepared, store_path)
+    rows = SnapshotStore(table_root).read_buckets(spark, buckets)
+    if batch is None:
+        return upload_markdown(rows, store_path)
+    name = (F.col("source.original_name") if "source" in batch.columns
+            else F.lit(None).cast("string"))
+    names = batch.select("doc_id", name.alias("original_name"))
+    return _put_markdown(_markdown_worklist(rows, names, how="inner"), store_path)
 
 
 def markdown_urls(output_df: DataFrame, store,

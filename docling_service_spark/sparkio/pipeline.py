@@ -31,7 +31,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from .batch import (INSTRUMENTATION_COLS, INSTRUMENTED_DDL, MAX_DOC_BYTES,
-                    extract_batches, make_extract_kernel)
+                    make_extract_kernel)
 
 SALT = 0x5EED  # fixed salt: decorrelates the partition key from other uses of xxhash64(doc_id)
 
@@ -61,12 +61,8 @@ def run_extraction(input_df: DataFrame, *, num_partitions: Optional[int] = None,
     df = input_df
     if num_partitions is not None:
         df = salted_repartition(df, num_partitions)
-    if max_doc_bytes is None and stats_acc is None:
-        kernel = extract_batches
-    else:
-        kernel = make_extract_kernel(
-            MAX_DOC_BYTES if max_doc_bytes is None else max_doc_bytes,
-            stats_acc=stats_acc)
+    kernel = make_extract_kernel(
+        MAX_DOC_BYTES if max_doc_bytes is None else max_doc_bytes, stats_acc=stats_acc)
     return df.mapInArrow(kernel, INSTRUMENTED_DDL)
 
 

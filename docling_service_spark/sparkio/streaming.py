@@ -2,72 +2,31 @@
 
 The reference is request/response (no streaming; SURVEY.md §2 Part B), but a
 landing-zone ingest is the natural continuous form of the batch job: new
-parquet files of (doc_id, spans) appear under a directory, each micro-batch
-runs the SAME extraction dataflow, and Spark's streaming checkpoint provides
-the resume cursor (the batch engine's manifest covers reprocessing; the
-stream covers arrival).
+parquet files of (doc_id, spans) appear under a directory, and each
+micro-batch doc-level-MERGEs into the snapshot table through the SAME
+``run_merge_upsert`` a batch job runs.  Spark's streaming checkpoint is the
+arrival cursor; the snapshot store is the only table layout, so a stream-fed
+table answers every store reader (``register_views``, ``compact``,
+``vacuum``, lifetime totals) like a batch-fed one.
 
-Exactly-once: ``foreachBatch`` writes each micro-batch to its own
-``data/batch={id}`` dir with overwrite — a retried batch rewrites the same
-dir, so duplicates are impossible even though the file sink itself is
-at-least-once.  Lineage rows append per micro-batch, tagged with the batch id.
+Exactly-once: each landed file feeds exactly one micro-batch, each
+micro-batch commits one snapshot, and a replayed micro-batch re-merges the
+same docs, diffs to zero changes and no-ops — so a document re-sent in a
+later file is stored once, not twice.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from typing import Optional
 
 from pyspark.sql import SparkSession
-
-from .batch import INSTRUMENTED_DDL
-from .pipeline import derive_lineage, run_extraction
 
 INPUT_DDL = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 INPUT_DDL_WITH_SOURCE = (
     INPUT_DDL + ", source struct<kind:string,value:string,original_name:string>"
 )
-
-
-def stream_extraction(
-    spark: SparkSession,
-    input_path: str,
-    output_root: str,
-    *,
-    max_files_per_trigger: Optional[int] = None,
-    await_termination: bool = True,
-):
-    """Run the extraction dataflow over a file-source stream.
-
-    Uses ``availableNow`` (process everything present, then stop) so the same
-    call serves both tests and cron-style incremental ingestion; a continuous
-    deployment drops ``availableNow`` for ``processingTime``.
-    """
-    reader = spark.readStream.schema(INPUT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-
-    out = run_extraction(stream)
-
-    def sink(batch_df, batch_id: int) -> None:
-        data_dir = os.path.join(output_root, "data", f"batch={batch_id}")
-        batch_df.write.parquet(data_dir, mode="overwrite")  # idempotent on retry
-        written = batch_df.sparkSession.read.schema(INSTRUMENTED_DDL).parquet(data_dir)
-        lineage = derive_lineage(written, run_id=f"batch-{batch_id}", snapshot_id=batch_id)
-        lineage.write.parquet(
-            os.path.join(output_root, "lineage", f"batch={batch_id}"), mode="overwrite"
-        )
-
-    query = (
-        out.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(output_root, "_stream_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_merge_upsert(
@@ -91,22 +50,24 @@ def stream_merge_upsert(
     Exactly-once composition: Spark's streaming checkpoint makes each file
     feed exactly one batch id, and a REPLAYED batch (crash between sink and
     checkpoint advance) re-merges the same docs → the doc-level diff finds
-    zero changes and no-ops.  Batch ids stamp the run ids, so every commit
-    is traceable to its micro-batch.
+    zero changes and no-ops.  Run ids are ``stream-{batch_id}-{suffix}``:
+    the batch id traces a commit to its micro-batch, and the random suffix
+    keeps ids unique after a checkpoint reset restarts batch ids at 0 (the
+    store refuses a run id it already references).
 
-    ``markdown_store`` uploads each committed micro-batch's markdown blobs
-    through the SAME merge-mode rule as ``job.py --markdown-store``
-    (``upload_merge_run_markdown``: batch docs only, kept-version names) —
-    pass ``input_ddl=INPUT_DDL_WITH_SOURCE`` when the landing files carry
-    source metadata so reference filenames resolve (else ``{doc_id}.md``).
+    ``markdown_store`` uploads each micro-batch's markdown blobs through the
+    SAME rule as ``job.py --merge-upsert --markdown-store``
+    (``upload_batch_markdown``: batch docs only, kept-version names) — pass
+    ``input_ddl=INPUT_DDL_WITH_SOURCE`` when the landing files carry source
+    metadata so reference filenames resolve (else ``{doc_id}.md``).
     Replay-safe WITHOUT loss: a batch replayed after a crash between the
-    merge commit and the upload merges as a zero-changed no-op, so the
-    no-op path re-uploads the batch's blobs from the COMMITTED snapshot
-    (``upload_committed_markdown``, bucket-pruned) — puts are doc-addressed
-    last-writer-wins, so re-uploading an already-delivered batch is
-    idempotent and the crash window cannot silently drop blobs."""
+    merge commit and the upload merges as a zero-changed no-op, and the
+    no-op re-uploads the batch's blobs from the buckets its docs hash to —
+    puts are doc-addressed last-writer-wins, so re-uploading an
+    already-delivered batch is idempotent and the crash window cannot
+    silently drop blobs."""
     from .checkpoint import run_merge_upsert
-    from .media_sink import upload_committed_markdown, upload_merge_run_markdown
+    from .media_sink import upload_batch_markdown
 
     reader = spark.readStream.schema(input_ddl or INPUT_DDL)
     if max_files_per_trigger:
@@ -115,22 +76,15 @@ def stream_merge_upsert(
 
     def sink(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
-        summary = run_merge_upsert(s, batch_df, table_root,
-                                   n_buckets=n_buckets, run_id=f"stream-{batch_id}",
+        summary = run_merge_upsert(s, batch_df, table_root, n_buckets=n_buckets,
+                                   run_id=f"stream-{batch_id}-{uuid.uuid4().hex[:6]}",
                                    keep_prepared=markdown_store is not None)
         prepared = summary.pop("prepared_deduped", None)
         try:
             if markdown_store:
-                if summary["snapshot_id"] is not None and summary["buckets"]:
-                    upload_merge_run_markdown(s, table_root, summary["run_id"],
-                                              prepared, markdown_store)
-                else:
-                    # No-op merge: either a replay of a batch whose upload
-                    # may have died post-commit, or genuinely re-sent data —
-                    # both recover/no-harm via the idempotent committed-
-                    # snapshot upload.
-                    upload_committed_markdown(s, table_root, prepared,
-                                              markdown_store)
+                upload_batch_markdown(
+                    s, table_root, prepared,
+                    summary["buckets"] or summary["batch_buckets"], markdown_store)
         finally:
             if prepared is not None:
                 prepared.unpersist()
@@ -144,15 +98,6 @@ def stream_merge_upsert(
     if await_termination:
         query.awaitTermination()
     return query
-
-
-def read_stream_output(spark: SparkSession, output_root: str):
-    from .pipeline import strip_instrumentation
-
-    data = os.path.join(output_root, "data")
-    if not os.path.exists(data):
-        return strip_instrumentation(spark.createDataFrame([], INSTRUMENTED_DDL))
-    return strip_instrumentation(spark.read.schema(INSTRUMENTED_DDL).parquet(data + "/batch=*"))
 
 
 # ---------------------------------------------------------------------------

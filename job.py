@@ -23,60 +23,6 @@ import sys
 import time
 
 
-def upload_run_markdown(spark, output: str, store_path: str, summary: dict,
-                        *, merge_mode: bool, merge_prepared=None,
-                        input_df=None) -> int:
-    """Markdown-store upload for one batch run — only this run's rows
-    (bucket dirs under ``data/run={id}``); uploads are doc-addressed
-    last-writer-wins, so re-runs and upserts stay correct.
-
-    Merge-mode NO-OP runs (snapshot_id None: the batch already merged)
-    still upload — crash-window recovery mirroring the streaming twin
-    (sparkio/streaming.py:99-132): a re-run after a crash between the merge
-    commit and the upload merges as a zero-changed no-op, but the batch's
-    docs ARE live in the committed snapshot, so they upload from there
-    (``upload_committed_markdown``, bucket-pruned; idempotent when the first
-    upload did land)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from docling_service_spark.sparkio.batch import INSTRUMENTED_DDL
-    from docling_service_spark.sparkio.media_sink import (
-        upload_committed_markdown,
-        upload_markdown,
-        upload_merge_run_markdown,
-    )
-    from docling_service_spark.sparkio.pipeline import strip_instrumentation
-
-    if merge_mode:
-        if merge_prepared is None:
-            return 0
-        if summary["snapshot_id"] is not None and summary["buckets"]:
-            # Merge mode routes through the ONE shared upload rule
-            # (batch-docs-only + kept-version names; see
-            # upload_merge_run_markdown) over the merge's own persisted
-            # deduped frame — no re-shuffle of the input.
-            return upload_merge_run_markdown(
-                spark, output, summary["run_id"], merge_prepared, store_path)
-        return upload_committed_markdown(
-            spark, output, merge_prepared, store_path)
-    if summary["snapshot_id"] is not None and summary["buckets"]:
-        run_dir = os.path.join(output, "data", f"run={summary['run_id']}")
-        written = strip_instrumentation(
-            spark.read.schema(INSTRUMENTED_DDL).parquet(run_dir)
-        )
-        # Reference naming needs the source's original filename when the
-        # corpus carries one (app/main.py:860-864); without the column,
-        # blobs fall back to {doc_id}.md.
-        names = None
-        if input_df is not None and "source" in input_df.columns:
-            names = input_df.select(
-                "doc_id", F.col("source.original_name").alias("original_name"))
-        return upload_markdown(written, store_path, names_df=names)
-    return 0
-
-
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--output", required=True)
@@ -246,10 +192,20 @@ def main(argv=None) -> int:
     if args.merge_upsert:
         report["docs_changed"] = summary["docs_changed"]
     if args.markdown_store:
-        report["markdown_uploaded"] = upload_run_markdown(
-            spark, args.output, args.markdown_store, summary,
-            merge_mode=args.merge_upsert, merge_prepared=merge_prepared,
-            input_df=inp)
+        from docling_service_spark.sparkio.media_sink import upload_batch_markdown
+
+        if args.merge_upsert:
+            # A no-op merge still uploads from its batch's buckets: a re-run
+            # after a crash between the merge's commit and its upload diffs
+            # to zero changes, yet the batch's docs are live there.
+            batch, buckets = merge_prepared, summary["buckets"] or summary["batch_buckets"]
+        else:
+            # The run's buckets hold only this input's docs; the input is
+            # needed only to name the blobs after their source files.
+            batch = inp if "source" in inp.columns else None
+            buckets = summary["buckets"]
+        report["markdown_uploaded"] = upload_batch_markdown(
+            spark, args.output, batch, buckets, args.markdown_store)
     if merge_prepared is not None:
         merge_prepared.unpersist()
     if args.compact:

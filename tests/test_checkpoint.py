@@ -12,7 +12,9 @@ from docling_service_spark.corpus import corpus_df
 from docling_service_spark.sparkio.checkpoint import (
     SnapshotStore,
     compact,
+    compact_lineage,
     run_incremental,
+    run_merge_upsert,
     run_upsert,
 )
 
@@ -320,3 +322,69 @@ def test_manifest_outside_the_format_is_refused(spark, tmp_path, damage, field,
     else:
         assert store.lifetime_totals()["docs"] == 30
     assert store._manifest_ids() == [1]  # nothing was committed on top
+
+
+def _files(root):
+    return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(root) for f in fs}
+
+
+def test_reused_run_id_is_refused_before_any_write(spark, tmp_path):
+    """A run writes its files under its id with overwrite semantics, so
+    reusing a committed id used to erase the first run's files: the
+    manifest then counted 80 live docs while 42 stayed readable.  Every
+    writer now refuses such an id before writing a file."""
+    root = str(tmp_path / "table")
+    inp = corpus_df(spark, 80, partitions=4)
+    r1 = run_incremental(spark, inp, root, n_buckets=N_BUCKETS,
+                         max_buckets_per_run=4, run_id="r1")
+    assert r1["docs"] == 38
+    before = _files(root)
+
+    with pytest.raises(ValueError, match="run_id 'r1'"):
+        run_incremental(spark, inp, root, n_buckets=N_BUCKETS,
+                        max_buckets_per_run=4, run_id="r1")
+    with pytest.raises(ValueError, match="run_id 'r1'"):
+        run_merge_upsert(spark, inp, root, n_buckets=N_BUCKETS, run_id="r1")
+    store = SnapshotStore(root)
+    assert _files(root) == before
+    assert store.read_output(spark).count() == store.live_doc_count() == 38
+
+    run_incremental(spark, inp, root, n_buckets=N_BUCKETS, run_id="r2")
+    before = _files(root)
+    with pytest.raises(ValueError, match="run_id 'r2'"):
+        compact(spark, root, max_live_runs=1, run_id="r2")
+    with pytest.raises(ValueError, match="run_id 'r1'"):
+        compact_lineage(spark, root, max_lineage_runs=1, run_id="r1")
+    assert _files(root) == before
+    assert store.read_output(spark).count() == 80
+
+    # A no-op re-run may reuse an id: it writes nothing.
+    noop = run_incremental(spark, inp, root, n_buckets=N_BUCKETS, run_id="r1")
+    assert noop["snapshot_id"] is None
+
+
+def test_only_the_store_knows_the_table_layout():
+    """sparkio/checkpoint.py is the one module that knows where a table's
+    files live: no other package module, and not job.py, builds a
+    ``run=``/``batch=`` path or reads parquet with INSTRUMENTED_DDL."""
+    import ast
+    import pathlib
+
+    import docling_service_spark
+
+    pkg = pathlib.Path(docling_service_spark.__file__).parent
+    paths = [p for p in sorted(pkg.rglob("*.py")) if p != pkg / "sparkio" / "checkpoint.py"]
+    paths.append(pkg.parent / "job.py")
+    found = []
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and ("run=" in node.value or "batch=" in node.value)):
+                found.append(f"{path.name}:{node.lineno} {node.value[:40]!r}")
+            elif (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                  and node.func.attr == "schema"
+                  and any(getattr(a, "id", getattr(a, "attr", None)) == "INSTRUMENTED_DDL"
+                          for a in node.args)):
+                found.append(f"{path.name}:{node.lineno} .schema(INSTRUMENTED_DDL)")
+    assert not found

@@ -10,10 +10,12 @@ import os
 from pyspark.sql import functions as F
 
 from docling_service_spark.corpus import corpus_df, source_meta
+from docling_service_spark.sparkio.checkpoint import SnapshotStore, run_incremental
 from docling_service_spark.sparkio.media_sink import (
     markdown_filename,
     markdown_key,
     markdown_urls,
+    upload_batch_markdown,
     upload_markdown,
 )
 from docling_service_spark.sparkio.pipeline import run_extraction, strip_instrumentation
@@ -71,6 +73,32 @@ def test_upload_markdown_local_store(spark, tmp_path):
     # Idempotent re-run: same keys, same count, bytes unchanged.
     assert upload_markdown(out, base, names_df=names) == n
     out.unpersist()
+
+
+def _tree(base):
+    out = {}
+    for root, _dirs, files in os.walk(base):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), base)] = fh.read()
+    return out
+
+
+def test_batch_upload_of_an_incremental_run(spark, tmp_path):
+    """An incremental run's buckets hold only its input's docs, so its
+    batch upload equals a direct upload of the committed rows: without a
+    batch every blob is named {doc_id}.md, and with the source-carrying
+    input every blob takes its source's original name."""
+    corpus = corpus_df(spark, 24, partitions=2, include_source=True)
+    root = str(tmp_path / "table")
+    run = run_incremental(spark, corpus, root, n_buckets=4, run_id="r")
+    out = SnapshotStore(root).read_output(spark)
+    names = corpus.select("doc_id", F.col("source.original_name").alias("original_name"))
+    for batch, names_df, tag in ((None, None, "plain"), (corpus, names, "named")):
+        got, want = str(tmp_path / f"{tag}_got"), str(tmp_path / f"{tag}_want")
+        n = upload_batch_markdown(spark, root, batch, run["buckets"], got)
+        assert n == upload_markdown(out, want, names_df=names_df) > 0
+        assert _tree(got) == _tree(want)
 
 
 def test_upload_markdown_object_store(spark, tmp_path):

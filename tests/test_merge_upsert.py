@@ -248,6 +248,54 @@ def test_stream_merge_upsert_waves(spark, tmp_path):
                 .filter(F.col("count") > 1).count() == 0
 
 
+def test_stream_merge_two_waves_exactly_once(spark, tmp_path):
+    """Arrival waves into the snapshot table: each wave's files feed one
+    micro-batch that commits once and books its own lineage run, a re-run
+    with nothing new is a no-op, and a document re-sent in a later file is
+    stored once.  The stream-fed table answers the store's SQL views, and
+    its lifetime totals equal the lineage sum."""
+    from docling_service_spark.corpus import corpus_df
+    from docling_service_spark.sparkio.checkpoint import register_views
+
+    land, root = str(tmp_path / "landing"), str(tmp_path / "table")
+    corpus_df(spark, 40, partitions=2).write.parquet(land, mode="append")
+    stream_merge_upsert(spark, land, root, n_buckets=N_BUCKETS)
+    store = SnapshotStore(root)
+    assert store.read_output(spark).count() == 40
+
+    # Wave 2: 40 new docs, plus wave 1's doc 7 re-sent unchanged.
+    resent = corpus_df(spark, 40, partitions=1).filter("doc_id = 'doc-42-00000007'")
+    corpus_df(spark, 80, partitions=2).filter("doc_id > 'doc-42-00000039'") \
+        .unionByName(resent).write.parquet(land, mode="append")
+    stream_merge_upsert(spark, land, root, n_buckets=N_BUCKETS)
+    ids = [r["doc_id"] for r in store.read_output(spark).select("doc_id").collect()]
+    assert len(ids) == 80
+    assert len(set(ids)) == 80  # exactly once across waves, re-sent doc included
+
+    # Re-running with nothing new is a no-op.
+    snap = store.current_manifest()["snapshot_id"]
+    stream_merge_upsert(spark, land, root, n_buckets=N_BUCKETS)
+    assert store.current_manifest()["snapshot_id"] == snap == 2
+    assert store.read_output(spark).count() == 80
+
+    # Lineage per micro-batch: one stream run per wave, and the re-sent
+    # doc booked no work.
+    runs = store.current_manifest()["lineage_runs"]
+    assert len(runs) == 2 and all(r.startswith("stream-") for r in runs)
+    lineage = store.read_lineage(spark)
+    booked = {r["run_id"]: r["docs"] for r in
+              lineage.groupBy("run_id").agg(F.sum("doc_count").alias("docs")).collect()}
+    assert booked == {runs[0]: 40, runs[1]: 40}
+
+    register_views(spark, root, prefix="streamed")
+    assert spark.sql("SELECT count(DISTINCT doc_id) AS n FROM streamed_extracted") \
+        .first()["n"] == 80
+    sums = spark.sql(
+        "SELECT sum(doc_count) AS docs, sum(parse_failures) AS parse_failures, "
+        "sum(rejected) AS rejected, sum(wall_ms) AS wall_ms FROM streamed_lineage").first()
+    assert store.lifetime_totals() == {k: int(sums[k]) for k in SnapshotStore.LIFETIME_KEYS}
+
+
 def _store_tree(base: str) -> dict[str, bytes]:
     out = {}
     for root, _dirs, files in os.walk(base):
@@ -265,7 +313,7 @@ def test_stream_merge_markdown_names_match_batch(spark, tmp_path):
     uploaded key AND bytes must equal what run_merge_upsert + the shared
     upload helper produce for the identical input."""
     from docling_service_spark.schemas import INPUT_SCHEMA_WITH_SOURCE
-    from docling_service_spark.sparkio.media_sink import upload_merge_run_markdown
+    from docling_service_spark.sparkio.media_sink import upload_batch_markdown
     from docling_service_spark.sparkio.streaming import INPUT_DDL_WITH_SOURCE
 
     def _src(name):
@@ -282,7 +330,7 @@ def test_stream_merge_markdown_names_match_batch(spark, tmp_path):
     r = run_merge_upsert(spark, spark.createDataFrame(batch, INPUT_SCHEMA_WITH_SOURCE),
                          root_b, n_buckets=N_BUCKETS, run_id="m0", keep_prepared=True)
     prepared = r.pop("prepared_deduped")
-    n_up = upload_merge_run_markdown(spark, root_b, r["run_id"], prepared, md_b)
+    n_up = upload_batch_markdown(spark, root_b, prepared, r["buckets"], md_b)
     prepared.unpersist()
     assert n_up == 2  # versions collapsed + sibling
 
@@ -313,11 +361,10 @@ def test_batch_merge_markdown_rerun_recovers_lost_upload(spark, tmp_path):
     """Batch twin of the streaming recovery below (r5 advice): a job.py
     --merge-upsert re-run after a crash between the merge commit and the
     markdown upload merges as a zero-changed no-op — the old gate skipped
-    the upload forever.  The no-op path must route through the committed-
-    snapshot upload (job.upload_run_markdown)."""
+    the upload forever.  The no-op path must upload from the buckets the
+    batch hashes to, as job.py does."""
     from docling_service_spark.schemas import INPUT_SCHEMA_WITH_SOURCE
-
-    import job as job_mod
+    from docling_service_spark.sparkio.media_sink import upload_batch_markdown
 
     def _src(name):
         return {"kind": "upload", "value": f"up/{name}", "original_name": name}
@@ -332,9 +379,9 @@ def test_batch_merge_markdown_rerun_recovers_lost_upload(spark, tmp_path):
                                    run_id=run_id, keep_prepared=True)
         prepared = summary.pop("prepared_deduped")
         try:
-            return summary, job_mod.upload_run_markdown(
-                spark, root, md, summary, merge_mode=True,
-                merge_prepared=prepared, input_df=inp)
+            return summary, upload_batch_markdown(
+                spark, root, prepared,
+                summary["buckets"] or summary["batch_buckets"], md)
         finally:
             prepared.unpersist()
 

@@ -85,8 +85,13 @@ def test_py_files_zip_deployment(tmp_path):
     assert (distinct, total) == (400, 400)
 
     # A merge of the same generator's first 420 docs changes only the 20
-    # new ones, and extracts them in one Python task.
-    merge = job(420, "zip2", "--merge-upsert")
+    # new ones, and extracts them in one Python task.  Its markdown upload
+    # runs from the zip too, and every changed doc gets a blob.
+    md = tmp_path / "md"
+    merge = job(420, "zip2", "--merge-upsert", "--markdown-store", str(md))
     assert merge["docs_changed"] == 20
     assert merge["python_tasks"] == lineage_rows("zip2") == 1
     assert merge["docs_in_snapshot"] == 420
+    changed = [f"doc-42-{i:08d}" for i in range(400, 420)]
+    assert all((md / "markdown" / d / f"{d}.md").is_file() for d in changed)
+    assert merge["markdown_uploaded"] >= len(changed)
