@@ -1080,12 +1080,9 @@ def run_merge_upsert(
             # As few Python tasks as the changed docs fill, each holding at
             # least one full Arrow batch.  ``changed`` keeps the dedup
             # window's shuffle partitioning (AQE does not coalesce a cached
-            # plan), and every Python task pays 150-500 ms of worker set-up
-            # before the kernel runs, even on a reused worker
-            # (importlib.invalidate_caches re-reads each zipimporter's
-            # directory).  Measured on 4 CPUs, 100 changed docs of 2000 at 8
-            # shuffle partitions: the merge's write took 1.9 s as 8 Python
-            # tasks and 1.1 s as 1.
+            # plan), and every Python task costs about 60 ms more than a JVM
+            # task, even on a reused worker: 64 no-op mapInArrow tasks take
+            # 1.0-1.2 s on 4 CPUs, 64 JVM-only tasks 0.1 s.
             batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
             n_tasks = -(-n_changed // batch_rows) if batch_rows > 0 else 1
             return _finish(_run_with_hook(
