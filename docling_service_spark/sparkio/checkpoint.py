@@ -28,7 +28,9 @@ Semantics that must stay honest:
 - **Idempotent resume**: work is bucketed by ``pmod(xxhash64(doc_id), n_buckets)``;
   a re-run processes exactly the buckets absent from the current manifest
   (the anti-join of input against committed lineage, expressed as bucket-set
-  subtraction so resume costs O(manifest), not a data-scale join).
+  subtraction, so planning the resume costs O(manifest), not a data-scale
+  join; the input is still scanned in full, since ``_bucket`` is computed
+  from doc_id, so a skipped bucket costs its scan, not its extraction).
 
 The reference analog is the resumable migration session log
 (``scripts/r2_migrate_xxhash.py:185-227``: JSON session file, processed-key
@@ -618,9 +620,9 @@ def compact_lineage(
     try:
         src = (spark.read.schema(LINEAGE_DDL).parquet(*dirs) if dirs
                else spark.createDataFrame([], LINEAGE_DDL))
-        # coalesce(1): the whole lineage table is a few KB per run — one
-        # file IS the point (the data table never does this).
-        src.coalesce(1).write.parquet(dst, mode="overwrite")
+        # One file IS the point: the whole lineage table is a few KB per run
+        # (the data table never does this).
+        src.repartition(1).write.parquet(dst, mode="overwrite")
         snapshot_id = store.commit(
             [], run_id, n_buckets=m["n_buckets"],
             expected_parent_snapshot_id=expected_parent,
@@ -673,8 +675,9 @@ def run_incremental(
         return summary
 
     prepared = prepare_input(input_df, n_buckets)
-    # Bucket-set membership is the scalable resume predicate (O(manifest) and
-    # pushed into the scan); when todo == everything it folds to a full scan.
+    # Bucket-set membership is the resume predicate: O(manifest) to plan,
+    # but ``_bucket`` is computed from doc_id, so the input is still scanned
+    # in full — a skipped bucket costs its scan, not its extraction.
     if len(todo) < n_buckets:
         prepared = prepared.filter(F.col("_bucket").isin([int(b) for b in todo]))
 
@@ -708,10 +711,10 @@ def _run_with_hook(spark, store, prepared, buckets, run_id, on_complete, *,
     return summary
 
 
-def prepare_input(input_df: DataFrame, n_buckets: int) -> DataFrame:
-    """Attach the passthrough columns: ``_bucket`` (resume/upsert granularity)
-    and ``_input_hash`` (content fingerprint of every OUTPUT-AFFECTING input
-    column, for change detection).  Both JVM-side, columnar.
+def input_hash(input_df: DataFrame):
+    """``_input_hash``: a content fingerprint of every OUTPUT-AFFECTING
+    input column, for change detection and for matching a stored row to
+    the input row that produced it (``media_sink.upload_batch_markdown``).
 
     The hash covers ``source`` when present — source metadata is stamped
     into the output (source_filename), so a source-only edit must mark the
@@ -720,21 +723,23 @@ def prepare_input(input_df: DataFrame, n_buckets: int) -> DataFrame:
     hash_cols = [F.col("doc_id"), F.to_json("spans")]
     if "source" in input_df.columns:
         hash_cols.append(F.to_json("source"))
+    return F.xxhash64(*hash_cols)
+
+
+def prepare_input(input_df: DataFrame, n_buckets: int) -> DataFrame:
+    """Attach the passthrough columns: ``_bucket`` (resume/upsert granularity)
+    and ``_input_hash`` (``input_hash``).  Both JVM-side, columnar."""
     return input_df.withColumn(
         "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn(
-        "_input_hash", F.xxhash64(*hash_cols)
-    )
+    ).withColumn("_input_hash", input_hash(input_df))
 
 
 def dedup_latest_version(prepared: DataFrame) -> DataFrame:
-    """Collapse duplicate doc_ids within one batch to ONE row — THE merge-mode
+    """Collapse duplicate doc_ids within one batch to ONE row — the merge's
     version rule (deterministic max ``_input_hash``; arbitrary between
-    versions since a DataFrame carries no arrival order).  Every consumer of
-    a merge batch MUST pick through this helper: ``run_merge_upsert`` uses it
-    for the kept content, ``job.py --markdown-store`` for the upload
-    filenames — a second inline copy of the window would silently
-    desynchronize name from content if the rule ever changed."""
+    versions since a DataFrame carries no arrival order).  Its one consumer
+    is ``run_merge_upsert``: the markdown upload matches stored rows to
+    input rows on ``(doc_id, _input_hash)`` instead of re-applying it."""
     from pyspark.sql.window import Window
 
     return (
@@ -959,7 +964,6 @@ def run_merge_upsert(
     run_id: Optional[str] = None,
     on_complete=None,
     max_doc_bytes: Optional[int] = None,
-    keep_prepared: bool = False,
 ) -> dict:
     """Doc-level MERGE (upsert for PARTIAL inputs): input docs are inserted
     or updated; docs absent from the input are untouched.
@@ -989,115 +993,83 @@ def run_merge_upsert(
     carries no arrival order; deployments needing strict last-wins should
     bound ``maxFilesPerTrigger`` so versions land in separate batches.
 
+    The plan stays lazy — nothing is cached — so AQE sizes every shuffle
+    read to its data, whatever ``spark.sql.shuffle.partitions`` says, and
+    the extraction to the changed docs (a rebalance of them alone).  The
+    price is that ``input_df`` is evaluated more than once (the touched
+    buckets, the per-bucket diff, the extraction and the carried rows'
+    anti join), so it must be deterministic, as every file source,
+    a ``foreachBatch`` micro-batch and ``corpus_df`` are.
+
     Concurrency: the commit is compare-and-swap on the PLANNED parent
     snapshot — carried rows were read from it, so committing onto any other
     parent would silently drop a concurrent writer's docs from shared
     buckets.  A lost race raises ``SnapshotConflictError``; re-run the
-    merge (the replayed diff skips whatever already landed).
-
-    ``keep_prepared=True`` attaches the deduped prepared frame (STILL
-    persisted) to the summary as ``prepared_deduped`` so downstream
-    consumers (job.py's merge-mode markdown upload, which needs the kept
-    version's ``source.original_name``) reuse the cached frame instead of
-    re-running prepare_input + the dedup window shuffle over the full input.
-    The caller owns ``unpersist()``."""
+    merge (the replayed diff skips whatever already landed)."""
     store = SnapshotStore(root)
     store.check_n_buckets(n_buckets)
     run_id = run_id or uuid.uuid4().hex[:12]
-    prepared = dedup_latest_version(prepare_input(input_df, n_buckets)).persist()
-    handed_off = False
-
-    def _finish(summary: dict) -> dict:
-        nonlocal handed_off
-        if keep_prepared:
-            summary["prepared_deduped"] = prepared
-            handed_off = True
+    prepared = prepare_input(input_df, n_buckets)
+    # One manifest read plans the whole merge: the committed bucket set, the
+    # run dirs the old rows come from and the carried rows' fingerprints all
+    # describe the snapshot the compare-and-swap commit is pinned to.
+    parent_manifest = store.current_manifest()
+    expected_parent = parent_manifest["snapshot_id"] if parent_manifest else None
+    committed_sums = store.committed_sums(parent_manifest) if parent_manifest else {}
+    touched = sorted(r["_bucket"] for r in
+                     prepared.select("_bucket").distinct().collect())
+    committed_touched = [b for b in touched if str(b) in committed_sums]
+    changed = dedup_latest_version(prepared)
+    old_hash = F.lit(None).cast("bigint")
+    if committed_touched:
+        old_keys = store.read_buckets(
+            spark, committed_touched, manifest=parent_manifest,
+        ).select("doc_id", F.col("_input_hash").alias("_old_hash"))
+        # _old_hash stays on until the per-bucket job has summed the
+        # replaced rows' fingerprints.
+        changed = (
+            changed.join(old_keys, "doc_id", "left")
+            .filter(F.col("_old_hash").isNull()
+                    | (F.col("_old_hash") != F.col("_input_hash")))
+        )
+        old_hash = F.col("_old_hash")
+    # One job gives the dirty buckets, the changed-doc count and the
+    # _bucket_summaries sums of the committed rows the changed docs replace.
+    per_bucket = {r["_bucket"]: r for r in changed.groupBy("_bucket").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(old_hash).alias("n_old"),
+        F.sum(old_hash.cast("decimal(38,0)")).alias("s_old"),
+        F.sum(F.when(old_hash.isNotNull(), F.xxhash64(old_hash))
+              .cast("decimal(38,0)")).alias("s2_old"),
+    ).collect()}
+    dirty_buckets = sorted(per_bucket)
+    if not dirty_buckets:
+        summary = {"run_id": run_id, "snapshot_id": None, "buckets": [],
+                   "docs": 0, "docs_changed": 0, "batch_buckets": touched}
+        notify_completion(on_complete, {**summary, "status": "noop", "detail": None})
         return summary
-
-    try:
-        # One manifest read plans the whole merge: the committed bucket set,
-        # the run dirs the old rows come from and the carried rows'
-        # fingerprints all describe the snapshot the compare-and-swap
-        # commit is pinned to.
-        parent_manifest = store.current_manifest()
-        expected_parent = parent_manifest["snapshot_id"] if parent_manifest else None
-        committed_sums = store.committed_sums(parent_manifest) if parent_manifest else {}
-        touched = sorted(r["_bucket"] for r in
-                         prepared.select("_bucket").distinct().collect())
-        committed_touched = [b for b in touched if str(b) in committed_sums]
-        if committed_touched:
-            old_keys = store.read_buckets(
-                spark, committed_touched, manifest=parent_manifest,
-            ).select("doc_id", F.col("_input_hash").alias("_old_hash"))
-            # _old_hash stays on until the per-bucket job has summed the
-            # replaced rows' fingerprints.
-            changed = (
-                prepared.join(old_keys, "doc_id", "left")
-                .filter(F.col("_old_hash").isNull()
-                        | (F.col("_old_hash") != F.col("_input_hash")))
-            )
-            changed = changed.persist()
-            own_changed = True
-        else:
-            # No committed buckets touched: every input doc is new, so
-            # ``changed`` IS the (already persisted) prepared frame — a
-            # second persist/unpersist pair on the same plan would evict
-            # prepared's cache entry out from under keep_prepared callers.
-            changed = prepared
-            own_changed = False
-        old_hash = F.col("_old_hash") if own_changed else F.lit(None).cast("bigint")
-        try:
-            # One job gives the dirty buckets, the changed-doc count and the
-            # _bucket_summaries sums of the committed rows the changed docs
-            # replace.
-            per_bucket = {r["_bucket"]: r for r in changed.groupBy("_bucket").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(old_hash).alias("n_old"),
-                F.sum(old_hash.cast("decimal(38,0)")).alias("s_old"),
-                F.sum(F.when(old_hash.isNotNull(), F.xxhash64(old_hash))
-                      .cast("decimal(38,0)")).alias("s2_old"),
-            ).collect()}
-            dirty_buckets = sorted(per_bucket)
-            if not dirty_buckets:
-                summary = {"run_id": run_id, "snapshot_id": None, "buckets": [],
-                           "docs": 0, "docs_changed": 0, "batch_buckets": touched}
-                notify_completion(on_complete, {**summary, "status": "noop", "detail": None})
-                return _finish(summary)
-            n_changed = sum(r["n"] for r in per_bucket.values())
-            dirty_committed = [b for b in dirty_buckets if str(b) in committed_sums]
-            carry, carry_sums = None, {}
-            if dirty_committed:
-                carry = store.read_buckets(
-                    spark, dirty_committed, manifest=parent_manifest,
-                ).join(changed.select("doc_id"), "doc_id", "left_anti")
-                # The carried rows are the parent's rows less the replaced
-                # ones, and so are their fingerprint sums.
-                for b in dirty_committed:
-                    n, s, s2 = committed_sums[str(b)]
-                    r = per_bucket[b]
-                    carry_sums[b] = (int(n) - r["n_old"], int(s) - int(r["s_old"] or 0),
-                                     int(s2) - int(r["s2_old"] or 0))
-            # As few Python tasks as the changed docs fill, each holding at
-            # least one full Arrow batch.  ``changed`` keeps the dedup
-            # window's shuffle partitioning (AQE does not coalesce a cached
-            # plan), and every Python task costs about 60 ms more than a JVM
-            # task, even on a reused worker: 64 no-op mapInArrow tasks take
-            # 1.0-1.2 s on 4 CPUs, 64 JVM-only tasks 0.1 s.
-            batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-            n_tasks = -(-n_changed // batch_rows) if batch_rows > 0 else 1
-            return _finish(_run_with_hook(
-                spark, store, changed.drop("_old_hash").coalesce(n_tasks),
-                dirty_buckets, run_id, on_complete,
-                num_partitions=num_partitions, allow_overwrite=True,
-                n_buckets=n_buckets, max_doc_bytes=max_doc_bytes, carry_rows=carry,
-                carry_sums=carry_sums, expected_parent=expected_parent,
-                extra_summary={"docs_changed": n_changed, "batch_buckets": touched},
-            ))
-        finally:
-            if own_changed:
-                changed.unpersist()
-    finally:
-        # On exception paths the frame is never handed off — unpersist even
-        # when keep_prepared was requested (no handle would reach the caller).
-        if not handed_off:
-            prepared.unpersist()
+    n_changed = sum(r["n"] for r in per_bucket.values())
+    dirty_committed = [b for b in dirty_buckets if str(b) in committed_sums]
+    carry, carry_sums = None, {}
+    if dirty_committed:
+        carry = store.read_buckets(
+            spark, dirty_committed, manifest=parent_manifest,
+        ).join(changed.select("doc_id"), "doc_id", "left_anti")
+        # The carried rows are the parent's rows less the replaced ones, and
+        # so are their fingerprint sums.
+        for b in dirty_committed:
+            n, s, s2 = committed_sums[str(b)]
+            r = per_bucket[b]
+            carry_sums[b] = (int(n) - r["n_old"], int(s) - int(r["s_old"] or 0),
+                             int(s2) - int(r["s2_old"] or 0))
+    # The extraction reads a rebalance of the changed docs alone, which AQE
+    # sizes to them.  Read straight off the dedup window's shuffle, it ran
+    # one Python task per partition AQE cut for the WHOLE batch that held a
+    # changed doc: a re-sent 420-doc batch with 20 new docs ran two.
+    return _run_with_hook(
+        spark, store, changed.drop("_old_hash").hint("rebalance"), dirty_buckets,
+        run_id, on_complete, num_partitions=num_partitions, allow_overwrite=True,
+        n_buckets=n_buckets, max_doc_bytes=max_doc_bytes, carry_rows=carry,
+        carry_sums=carry_sums, expected_parent=expected_parent,
+        extra_summary={"docs_changed": n_changed, "batch_buckets": touched},
+    )

@@ -129,24 +129,25 @@ def markdown_key(doc_id: str, original_name: Optional[str] = None) -> str:
 
 def _markdown_worklist(output_df: DataFrame,
                        names_df: Optional[DataFrame] = None,
-                       *, how: str = "left") -> DataFrame:
+                       *, on: tuple = ("doc_id",), how: str = "left") -> DataFrame:
     """(doc_id, key, markdown) for every completed doc.  ``names_df``
-    (doc_id, original_name) supplies upload filenames; url-kind and
-    unnamed docs fall back to ``{doc_id}.md`` like the reference.
-    ``how="inner"`` also drops the docs ``names_df`` does not list."""
+    (the ``on`` columns + original_name) supplies upload filenames, joined
+    to the output on ``on``; url-kind and unnamed docs fall back to
+    ``{doc_id}.md`` like the reference.  ``how="inner"`` also drops the
+    docs ``names_df`` does not match."""
+    keys = list(on)
     work = output_df.filter(F.col("status") == "completed") \
-                    .select("doc_id", "markdown")
+                    .select(*keys, "markdown")
     if names_df is not None:
         # NOT broadcast: names_df is one row per doc (same cardinality as the
-        # output), so at scale this is an equi-join on doc_id that AQE plans
-        # as SMJ/shuffle-hash; forcing broadcast would ship the whole corpus'
+        # output), so at scale this is an equi-join that AQE plans as
+        # SMJ/shuffle-hash; forcing broadcast would ship the whole corpus'
         # names to every task.  dropDuplicates is a fan-out SAFETY NET only
-        # (an undeduped join would duplicate upload rows); its pick is
-        # arbitrary, so merge-mode callers must pre-dedup names with the SAME
-        # version rule that picked the kept content (upload_batch_markdown
-        # takes them from run_merge_upsert's deduped frame).
-        names = names_df.select("doc_id", "original_name").dropDuplicates(["doc_id"])
-        work = work.join(names, "doc_id", how)
+        # (an undeduped join would duplicate upload rows).  Its pick is
+        # arbitrary on doc_id alone; on (doc_id, _input_hash) the rows it
+        # chooses between carry the same source, hence the same name.
+        names = names_df.select(*keys, "original_name").dropDuplicates(keys)
+        work = work.join(names, keys, how)
     else:
         work = work.withColumn("original_name", F.lit(None).cast("string"))
     fname = F.coalesce(F.col("original_name"), F.concat(F.col("doc_id"), F.lit(".md")))
@@ -207,25 +208,29 @@ def upload_batch_markdown(spark, table_root: str, batch: Optional[DataFrame],
     zero-changed no-op, yet its docs are live there, and re-putting
     doc-addressed blobs is idempotent.
 
-    ``batch`` is the frame whose docs to upload.  A merge's buckets also hold
-    same-bucket siblings absent from the batch, and uploading those would
-    mint a new ``{doc_id}.md`` key beside their original upload, so only
-    ``batch``'s docs are kept, named by its ``source.original_name`` when it
-    has one (pass the merge's deduped frame, so name and content come from
-    the same kept version).  ``None``: the buckets hold nothing but this
-    run's own docs (an incremental or wholesale-upsert run over an input
-    without ``source``), so every doc uploads as ``{doc_id}.md``."""
+    ``batch`` is the raw input the run was given.  A merge's buckets also
+    hold same-bucket siblings absent from the batch, and uploading those
+    would mint a new ``{doc_id}.md`` key beside their original upload, so
+    only stored rows that match a batch row on ``(doc_id, _input_hash)``
+    upload (the batch is hashed again by ``checkpoint.input_hash``), named
+    by that row's ``source.original_name`` when it has one: of two versions
+    in one batch only the kept one matches, so name and content come from
+    the same row.  ``None``: the buckets hold nothing but this run's own
+    docs (an incremental or wholesale-upsert run over an input without
+    ``source``), so every doc uploads as ``{doc_id}.md``."""
     if not buckets:
         return 0
-    from .checkpoint import SnapshotStore
+    from .checkpoint import SnapshotStore, input_hash
 
     rows = SnapshotStore(table_root).read_buckets(spark, buckets)
     if batch is None:
         return upload_markdown(rows, store_path)
     name = (F.col("source.original_name") if "source" in batch.columns
             else F.lit(None).cast("string"))
-    names = batch.select("doc_id", name.alias("original_name"))
-    return _put_markdown(_markdown_worklist(rows, names, how="inner"), store_path)
+    names = batch.select("doc_id", input_hash(batch).alias("_input_hash"),
+                         name.alias("original_name"))
+    return _put_markdown(_markdown_worklist(rows, names, on=("doc_id", "_input_hash"),
+                                            how="inner"), store_path)
 
 
 def markdown_urls(output_df: DataFrame, store,

@@ -7,24 +7,37 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+# SQL defaults, applied after the session exists and only to keys nothing
+# pinned (see get_spark).
+_SQL_DEFAULTS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def get_spark(
     master: Optional[str] = None,
     *,
     app_name: str = "docling-service-spark",
     shuffle_partitions: Optional[int] = None,
-    arrow_batch_rows: int = 256,
     extra_conf: Optional[dict] = None,
 ) -> SparkSession:
     """Build a session.
 
     - AQE on: runtime shuffle coalescing + skew-join splitting for the
-      relational operators (it cannot fix Python-stage skew — the pipeline's
-      explicit salted repartition does that).
-    - Bounded Arrow batches (default 256 docs): one document row can carry a
+      relational operators and the merge (it cannot fix Python-stage skew —
+      the pipeline's explicit salted repartition does that).
+    - Bounded Arrow batches (256 docs): one document row can carry a
       multi-megabyte span array; the batch-size cap bounds Python-worker
       memory (the engine analog of the reference's 25 MiB upload cap +
       8 G container limit, app/config.py:14, docker-compose.yml:23-32).
+
+    Every SQL default here (``_SQL_DEFAULTS`` and the layout keys below)
+    yields to a value a spark-submit ``--conf`` or ``extra_conf`` pinned.
     """
     # Respect spark-submit's --master: it arrives via PYSPARK_SUBMIT_ARGS and
     # builder.master() would OVERRIDE it (measured: a `spark-submit --master
@@ -48,13 +61,7 @@ def get_spark(
     builder = (
         builder
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.python.worker.reuse", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if shuffle_partitions is not None:
@@ -62,12 +69,16 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # Layout settings are applied POST-create and only where nothing has
+    # SQL defaults are applied POST-create and only where nothing has
     # pinned them yet: builder.config would override a spark-submit --conf
     # (measured — an explicit 16m split pin from scaling_bench.py silently
-    # became this default), so a --conf or extra_conf value always wins.
+    # became the split default below), so a --conf or extra_conf value
+    # always wins.
     conf = getattr(spark, "conf", None)  # absent on test fakes
     if conf is not None:
+        for key, value in _SQL_DEFAULTS.items():
+            if conf.get(key, None) is None:
+                conf.set(key, value)
         # Parquet row-group size for OUR writes (r9, guide §2.5/§6):
         # documents are atomic multi-100-KB rows, and the default 128 MB row
         # group makes a 130 MB corpus file ONE row group — unsplittable, so a

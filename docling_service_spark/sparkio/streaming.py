@@ -57,9 +57,10 @@ def stream_merge_upsert(
 
     ``markdown_store`` uploads each micro-batch's markdown blobs through the
     SAME rule as ``job.py --merge-upsert --markdown-store``
-    (``upload_batch_markdown``: batch docs only, kept-version names) — pass
-    ``input_ddl=INPUT_DDL_WITH_SOURCE`` when the landing files carry source
-    metadata so reference filenames resolve (else ``{doc_id}.md``).
+    (``upload_batch_markdown`` over the raw micro-batch: batch docs only,
+    kept-version names) — pass ``input_ddl=INPUT_DDL_WITH_SOURCE`` when
+    the landing files carry source metadata so reference filenames resolve
+    (else ``{doc_id}.md``).
     Replay-safe WITHOUT loss: a batch replayed after a crash between the
     merge commit and the upload merges as a zero-changed no-op, and the
     no-op re-uploads the batch's blobs from the buckets its docs hash to —
@@ -77,17 +78,11 @@ def stream_merge_upsert(
     def sink(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
         summary = run_merge_upsert(s, batch_df, table_root, n_buckets=n_buckets,
-                                   run_id=f"stream-{batch_id}-{uuid.uuid4().hex[:6]}",
-                                   keep_prepared=markdown_store is not None)
-        prepared = summary.pop("prepared_deduped", None)
-        try:
-            if markdown_store:
-                upload_batch_markdown(
-                    s, table_root, prepared,
-                    summary["buckets"] or summary["batch_buckets"], markdown_store)
-        finally:
-            if prepared is not None:
-                prepared.unpersist()
+                                   run_id=f"stream-{batch_id}-{uuid.uuid4().hex[:6]}")
+        if markdown_store:
+            upload_batch_markdown(s, table_root, batch_df,
+                                  summary["buckets"] or summary["batch_buckets"],
+                                  markdown_store)
 
     query = (
         stream.writeStream.foreachBatch(sink)

@@ -130,10 +130,6 @@ def main(argv=None) -> int:
             run_id=args.run_id,
             on_complete=on_complete,
             max_doc_bytes=args.max_doc_bytes,
-            # The markdown upload needs the kept version's doc set + original
-            # names — reuse the merge's own persisted deduped frame instead
-            # of re-running prepare_input + the dedup window over the input.
-            keep_prepared=bool(args.markdown_store),
         )
     elif args.upsert:
         summary = run_upsert(
@@ -155,9 +151,6 @@ def main(argv=None) -> int:
             max_doc_bytes=args.max_doc_bytes,
         )
     wall = time.perf_counter() - t0
-    # Popped so the report stays JSON-serializable; still persisted when set
-    # (run_merge_upsert's keep_prepared contract) — unpersisted after upload.
-    merge_prepared = summary.pop("prepared_deduped", None)
 
     store = SnapshotStore(args.output)
     # Work totals come from the manifest's lifetime_stats (accumulated at
@@ -198,7 +191,7 @@ def main(argv=None) -> int:
             # A no-op merge still uploads from its batch's buckets: a re-run
             # after a crash between the merge's commit and its upload diffs
             # to zero changes, yet the batch's docs are live there.
-            batch, buckets = merge_prepared, summary["buckets"] or summary["batch_buckets"]
+            batch, buckets = inp, summary["buckets"] or summary["batch_buckets"]
         else:
             # The run's buckets hold only this input's docs; the input is
             # needed only to name the blobs after their source files.
@@ -206,8 +199,6 @@ def main(argv=None) -> int:
             buckets = summary["buckets"]
         report["markdown_uploaded"] = upload_batch_markdown(
             spark, args.output, batch, buckets, args.markdown_store)
-    if merge_prepared is not None:
-        merge_prepared.unpersist()
     if args.compact:
         from docling_service_spark.sparkio.checkpoint import (
             SnapshotConflictError, compact, compact_lineage)

@@ -111,37 +111,35 @@ def test_merge_dedups_doc_ids_within_batch(spark, tmp_path):
     assert out.groupBy("doc_id").count().filter(F.col("count") > 1).count() == 0
 
 
-def test_merge_keep_prepared_hands_off_cached_dedup_frame(spark, tmp_path):
-    """keep_prepared=True (r4 advice: job.py's markdown upload re-ran
-    prepare_input + the dedup window over the input just to pick names):
-    the summary carries the merge's OWN persisted deduped frame — one row
-    per doc_id, the max-_input_hash version — on both the commit and the
-    no-op return path; the caller unpersists."""
-    root = str(tmp_path / "table")
-    v = _fresh_doc(1)
-    v2 = _mutate(v)
-    batch = spark.createDataFrame([v, v2, _fresh_doc(2)], INPUT_SCHEMA)
-    r = run_merge_upsert(spark, batch, root, n_buckets=N_BUCKETS, run_id="m",
-                         keep_prepared=True)
-    prepared = r.pop("prepared_deduped")
-    assert prepared.storageLevel.useMemory or prepared.storageLevel.useDisk
-    rows = {row["doc_id"]: row for row in prepared.collect()}
-    assert set(rows) == {"new-0001", "new-0002"}  # versions collapsed
-    # The kept version matches what the merge committed (same dedup rule).
-    committed = {row["doc_id"]: row["spans"]
-                 for row in SnapshotStore(root).read_output(spark).collect()}
-    assert [s["text"] for s in rows["new-0001"]["spans"]] \
-        == [s["text"] for s in committed["new-0001"]]
-    prepared.unpersist()
+def _persisted_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    # Replay → no-op: the frame is still handed off (job.py's upload gate
-    # decides whether to use it), and without keep_prepared nothing leaks.
+
+def test_merge_leaves_no_rdd_persisted(spark, tmp_path):
+    """The merge is one lazy plan: no RDD is persisted while it runs (the
+    completion hook fires after the commit, inside the merge) or after it
+    returns, on the committing path and on the no-op path alike."""
+    root = str(tmp_path / "table")
+    v1 = make_corpus(N_DOCS)
+    run_incremental(spark, spark.createDataFrame(v1, INPUT_SCHEMA), root,
+                    n_buckets=N_BUCKETS, num_partitions=2, run_id="base")
+    batch = spark.createDataFrame([_mutate(v1[3]), _fresh_doc(1), _fresh_doc(1)],
+                                  INPUT_SCHEMA)
+    before = _persisted_rdd_ids(spark)
+    during = []
+
+    def hook(payload):
+        during.append((payload["status"], _persisted_rdd_ids(spark)))
+
+    r = run_merge_upsert(spark, batch, root, n_buckets=N_BUCKETS, run_id="m",
+                         on_complete=hook)
+    assert r["snapshot_id"] is not None and r["docs_changed"] == 2
+    assert _persisted_rdd_ids(spark) == before
     r2 = run_merge_upsert(spark, batch, root, n_buckets=N_BUCKETS, run_id="m2",
-                          keep_prepared=True)
+                          on_complete=hook)
     assert r2["snapshot_id"] is None
-    r2["prepared_deduped"].unpersist()
-    r3 = run_merge_upsert(spark, batch, root, n_buckets=N_BUCKETS, run_id="m3")
-    assert "prepared_deduped" not in r3
+    assert _persisted_rdd_ids(spark) == before
+    assert during == [("completed", before), ("noop", before)]
 
 
 def test_merge_conflicts_on_concurrent_snapshot_advance(spark, tmp_path):
@@ -191,10 +189,10 @@ def test_merge_into_empty_table(spark, tmp_path):
 
 def test_small_merge_runs_one_python_task_at_default_shuffle_partitions(spark, tmp_path):
     """The changed docs reach the kernel in as few Python tasks as they fill:
-    the persisted diff keeps the shuffle's partition count, and every Python
-    task pays a fixed worker set-up cost.  Lineage books one row per Python
-    task that extracted a row, so a 5-doc merge at Spark's default 200
-    shuffle partitions books exactly one."""
+    the extraction reads a rebalance of the changed docs alone, which AQE
+    sizes to them, and every Python task pays a fixed worker set-up cost.  Lineage books one row per
+    Python task that extracted a row, so a 5-doc merge at Spark's default
+    200 shuffle partitions books exactly one."""
     root = str(tmp_path / "table")
     v1 = make_corpus(N_DOCS)
     run_incremental(spark, spark.createDataFrame(v1, INPUT_SCHEMA), root,
@@ -212,6 +210,37 @@ def test_small_merge_runs_one_python_task_at_default_shuffle_partitions(spark, t
             .filter(F.col("run_id") == "m").collect())
     assert [row["doc_count"] for row in rows] == [5]
     assert r["docs_changed"] == 5 and r["python_tasks"] == 1
+
+
+def test_small_merge_stages_fit_the_batch_at_default_shuffle_partitions(spark, tmp_path):
+    """Every stage of a small merge at Spark's default 200 shuffle
+    partitions is sized to its data, not to the setting: no stage runs more
+    than 2x defaultParallelism tasks.  A cached frame keeps the shuffle's
+    partition count (AQE does not coalesce it), so a persisted diff ran
+    200-task stages here."""
+    root = str(tmp_path / "table")
+    v1 = make_corpus(N_DOCS)
+    run_incremental(spark, spark.createDataFrame(v1, INPUT_SCHEMA), root,
+                    n_buckets=N_BUCKETS, num_partitions=2, run_id="base")
+    batch = spark.createDataFrame([_mutate(v1[3]), _mutate(v1[7]), _fresh_doc(1)],
+                                  INPUT_SCHEMA)
+    sc, group = spark.sparkContext, "merge-at-200-partitions"
+    pinned = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    sc.setJobGroup(group, "small merge at 200 shuffle partitions")
+    try:
+        r = run_merge_upsert(spark, batch, root, n_buckets=N_BUCKETS, run_id="m")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", pinned)
+    assert r["docs_changed"] == 3
+    tracker = sc.statusTracker()
+    stage_ids = {sid for job in tracker.getJobIdsForGroup(group)
+                 for sid in tracker.getJobInfo(job).stageIds}
+    tasks = {sid: tracker.getStageInfo(sid).numTasks for sid in stage_ids
+             if tracker.getStageInfo(sid) is not None}
+    assert tasks, "no stage was recorded for the merge's job group"
+    assert max(tasks.values()) <= 2 * sc.defaultParallelism, tasks
 
 
 def _land_wave(spark, path, docs, name, schema=INPUT_SCHEMA):
@@ -327,11 +356,9 @@ def test_stream_merge_markdown_names_match_batch(spark, tmp_path):
 
     # Batch path: merge + the shared merge-mode upload helper (job.py's path).
     root_b, md_b = str(tmp_path / "tbl_b"), str(tmp_path / "md_b")
-    r = run_merge_upsert(spark, spark.createDataFrame(batch, INPUT_SCHEMA_WITH_SOURCE),
-                         root_b, n_buckets=N_BUCKETS, run_id="m0", keep_prepared=True)
-    prepared = r.pop("prepared_deduped")
-    n_up = upload_batch_markdown(spark, root_b, prepared, r["buckets"], md_b)
-    prepared.unpersist()
+    inp = spark.createDataFrame(batch, INPUT_SCHEMA_WITH_SOURCE)
+    r = run_merge_upsert(spark, inp, root_b, n_buckets=N_BUCKETS, run_id="m0")
+    n_up = upload_batch_markdown(spark, root_b, inp, r["buckets"], md_b)
     assert n_up == 2  # versions collapsed + sibling
 
     # Streaming path: the same three rows land as ONE wave.
@@ -375,15 +402,9 @@ def test_batch_merge_markdown_rerun_recovers_lost_upload(spark, tmp_path):
     inp = spark.createDataFrame(batch, INPUT_SCHEMA_WITH_SOURCE)
 
     def _run(run_id):
-        summary = run_merge_upsert(spark, inp, root, n_buckets=N_BUCKETS,
-                                   run_id=run_id, keep_prepared=True)
-        prepared = summary.pop("prepared_deduped")
-        try:
-            return summary, upload_batch_markdown(
-                spark, root, prepared,
-                summary["buckets"] or summary["batch_buckets"], md)
-        finally:
-            prepared.unpersist()
+        summary = run_merge_upsert(spark, inp, root, n_buckets=N_BUCKETS, run_id=run_id)
+        return summary, upload_batch_markdown(
+            spark, root, inp, summary["buckets"] or summary["batch_buckets"], md)
 
     s1, n1 = _run("m1")
     assert s1["snapshot_id"] is not None and n1 == 2

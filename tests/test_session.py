@@ -1,4 +1,4 @@
-"""Session layout settings: the package's row-group and split-size defaults
+"""Session settings: the package's SQL, row-group and split-size defaults
 apply only where nothing pinned a value, a live write still lands in several
 row groups, and the package reads no environment knobs beyond the three its
 docs name."""
@@ -52,16 +52,18 @@ class _FakeBuilder:
 
 @pytest.mark.parametrize("pinned", [
     {"spark.hadoop.parquet.block.size": "134217728",
-     "spark.sql.files.maxPartitionBytes": "16m"},
+     "spark.sql.files.maxPartitionBytes": "16m",
+     "spark.sql.execution.arrow.maxRecordsPerBatch": "1024"},
     {"parquet.block.size": "8388608",
-     "spark.sql.files.maxPartitionBytes": "16m"},
+     "spark.sql.files.maxPartitionBytes": "16m",
+     "spark.sql.execution.arrow.maxRecordsPerBatch": "1024"},
 ], ids=["spark_hadoop_key", "plain_key"])
 def test_pinned_layout_conf_survives_get_spark(monkeypatch, pinned):
     # A spark-submit --conf lands in the session conf before get_spark runs.
     builder = _FakeBuilder(_FakeConf(pinned))
     monkeypatch.setattr(sess.SparkSession, "builder", builder)
     spark = sess.get_spark("local[2]")
-    assert spark.conf.values == {**builder.configured, **pinned}
+    assert spark.conf.values == {**builder.configured, **sess._SQL_DEFAULTS, **pinned}
 
 
 def test_unpinned_layout_conf_gets_package_defaults(monkeypatch):
@@ -70,6 +72,7 @@ def test_unpinned_layout_conf_gets_package_defaults(monkeypatch):
     conf = sess.get_spark("local[2]").conf.values
     assert conf["parquet.block.size"] == str(4 * 1024 * 1024)
     assert conf["spark.sql.files.maxPartitionBytes"] == "4m"
+    assert {k: conf[k] for k in sess._SQL_DEFAULTS} == sess._SQL_DEFAULTS
 
 
 def test_shared_session_writes_several_row_groups(spark, tmp_path):
